@@ -13,6 +13,10 @@ Reference behavior being re-expressed:
   baked into the view definition, which is strictly stronger than query
   rewriting: there is no SQL string that bypasses it.
 
+The INFORMATION_SCHEMA views are JVM-local relations
+(``session.local_frame``): every info query reads them, and it must not
+start Python worker tasks to return a handful of rows.
+
 Deviation (documented): Spark temp views have no dotted namespaces, so
 ``INFORMATION_SCHEMA.TABLES`` surfaces as ``information_schema_tables``.
 """
@@ -25,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fineo_readerator_spark.schema_store import SchemaStore, spark_type
+from fineo_readerator_spark.session import local_frame
 from fineo_readerator_spark.sources import SourceSpec
 
 CATALOG_NAME = "FINEO"
@@ -34,18 +39,18 @@ ERROR_COLUMNS = ["type", "stage", "event", "message", "handled_timestamp"]
 
 
 def info_schema_catalogs(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(CATALOG_NAME,)], "catalog_name string")
+    return local_frame(spark, [(CATALOG_NAME,)], "catalog_name string")
 
 
 def info_schema_schemata(spark: SparkSession, store: SchemaStore, org: str) -> DataFrame:
     rows = [(CATALOG_NAME, org)] if store.metrics(org) else []
-    return spark.createDataFrame(rows, "catalog_name string, schema_name string")
+    return local_frame(spark, rows, "catalog_name string, schema_name string")
 
 
 def info_schema_tables(spark: SparkSession, store: SchemaStore, org: str) -> DataFrame:
     rows = [(CATALOG_NAME, org, m, "TABLE") for m in store.metrics(org)]
-    return spark.createDataFrame(
-        rows, "table_catalog string, table_schema string, table_name string, table_type string"
+    return local_frame(
+        spark, rows, "table_catalog string, table_schema string, table_name string, table_type string"
     )
 
 
@@ -58,7 +63,8 @@ def info_schema_columns(spark: SparkSession, store: SchemaStore, org: str) -> Da
         for f in schema.fields:
             pos += 1
             rows.append((CATALOG_NAME, org, m, f.cname, pos, spark_type(f.typ).simpleString().upper()))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "table_catalog string, table_schema string, table_name string, "
         "column_name string, ordinal_position int, data_type string",

@@ -23,7 +23,7 @@ from typing import Optional
 
 from fineo_readerator_spark.api import ReadOnlyViolation, TenantSession
 from fineo_readerator_spark.schema_store import SchemaStore
-from fineo_readerator_spark.server import _json_value
+from fineo_readerator_spark.server import _duplicate_columns_error, _json_value
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -77,11 +77,16 @@ def main(argv: Optional[list[str]] = None, spark=None) -> int:
     tenant = TenantSession(spark, store, args.org)
     try:
         df = tenant.sql(args.sql, max_rows=args.max_rows)
-        # toLocalIterator: partitions stream to the driver one at a time, so
-        # dumping a big result never materializes it driver-side (the CLI
-        # analog of the server's Avatica-style frames)
+        dup_error = _duplicate_columns_error(df.columns)
+        if dup_error:
+            print(dup_error, file=sys.stderr)
+            return 1
+        # toLocalIterator holds one partition in driver memory at a time.
+        # With --max-rows the LIMIT first gathers the capped result into
+        # one partition, so the bound is then max_rows rows, as for one
+        # open statement of the server.
         for row in df.toLocalIterator():
-            print(json.dumps({c: _json_value(row[c]) for c in df.columns}))
+            print(json.dumps({c: _json_value(row[c]) for c in df.columns}, allow_nan=False))
     except ReadOnlyViolation as e:
         print(f"rejected: {e}", file=sys.stderr)
         return 1

@@ -39,6 +39,7 @@ from fineo_readerator_spark.schema_store import (
     SchemaStore,
     spark_type,
 )
+from fineo_readerator_spark.session import local_frame
 from fineo_readerator_spark.sources import HISTORICAL, NEARLINE_ITEMS, SourceSpec, TimeRange
 
 
@@ -218,7 +219,8 @@ def empty_metric_df(spark: SparkSession, schema: MetricSchema) -> DataFrame:
         fields.append(T.StructField(fdef.cname, spark_type(fdef.typ)))
     if schema.track_unknown:
         fields.append(T.StructField(UNKNOWN_FIELDS_MAP, T.MapType(T.StringType(), T.StringType())))
-    return spark.createDataFrame([], T.StructType(fields))
+    # JVM-local, so a metric with no live sources starts no Python workers
+    return local_frame(spark, [], T.StructType(fields))
 
 
 def build_metric_df(

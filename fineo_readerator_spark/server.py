@@ -19,20 +19,24 @@ Result paging mirrors Avatica's statement/frame protocol
 Frame{offset, done, rows}): ``POST /query`` executes and returns the FIRST
 frame plus a ``statement_id`` while more rows remain; ``POST /fetch`` pages
 forward; ``POST /close`` (or draining to ``done``) releases the cursor.
-Driver memory stays bounded at frame granularity because the cursor wraps
-``df.toLocalIterator()`` — partitions stream to the driver one at a time,
-the Spark analog of Avatica iterating its ResultSet, never a full
-``collect()``.  Like Avatica, the cursor is forward-only: re-execute to
-rewind.  The ``max_rows`` cap is still a plan-level LIMIT on top.
+As in Avatica, a statement executes once and its frames page out of that
+one result: ``/query`` runs one ``collect()`` of the plan capped at
+``max_rows`` (a plan-level LIMIT) and ``/fetch`` slices it.  Driver memory
+is bounded by ``max_rows`` rows per open statement times
+``max_statements``.  A ``toLocalIterator`` cursor would bound nothing
+tighter: over a LIMIT it shuffles the whole capped result into one
+partition, which the driver then holds, at the cost of one more stage per
+statement.  The cursor is forward-only: re-execute to rewind.
 """
 
 from __future__ import annotations
 
 import itertools
 import json
+import math
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Iterator, Optional
+from typing import Optional
 
 from fineo_readerator_spark.api import ReadOnlyViolation, TenantSession
 
@@ -47,7 +51,9 @@ class TenantValidationError(Exception):
 
 
 def _json_value(v):
-    """JSON-safe cell: binary -> latin-1 string, nested rows via asDict."""
+    """JSON-safe cell: binary -> latin-1 string, nested rows via asDict,
+    non-finite doubles -> ``"NaN"``/``"Infinity"``/``"-Infinity"`` (strict
+    JSON has no literal for them)."""
     if isinstance(v, (bytes, bytearray)):
         return v.decode("latin-1")
     if hasattr(v, "asDict"):
@@ -56,34 +62,42 @@ def _json_value(v):
         return {k: _json_value(x) for k, x in v.items()}
     if isinstance(v, list):
         return [_json_value(x) for x in v]
+    if isinstance(v, float) and not math.isfinite(v):
+        return "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
     return v if (v is None or isinstance(v, (bool, int, float, str))) else str(v)
+
+
+def _duplicate_columns_error(columns: list[str]) -> Optional[str]:
+    """The client error for output columns that repeat a name, or None.
+    Rows go out as maps keyed by column name, so a repeated name would
+    silently drop all but one of its columns."""
+    dups = sorted({c for c in columns if columns.count(c) > 1})
+    if not dups:
+        return None
+    return (
+        f"duplicate output column names {dups}: rows are maps keyed by "
+        "column name; alias the columns apart"
+    )
 
 
 class _Cursor:
     """One open statement's forward-only result cursor (an Avatica
-    StatementHandle + its ResultSet).  Wraps ``toLocalIterator`` so the
-    driver holds at most one partition of rows at a time."""
+    StatementHandle + its ResultSet): the statement's collected rows, at
+    most ``max_rows`` of them, paged out frame by frame.  A server keeps at
+    most ``max_statements`` open, so the driver holds at most ``max_rows``
+    times ``max_statements`` rows for open statements."""
 
-    def __init__(self, columns: list[str], rows: Iterator) -> None:
+    def __init__(self, columns: list[str], rows: list) -> None:
         self.columns = columns
         self._rows = rows
         self.offset = 0  # rows served so far == the next frame's offset
         self.lock = threading.Lock()
 
     def next_frame(self, frame_size: int) -> tuple[list[dict], bool]:
-        batch = list(itertools.islice(self._rows, frame_size))
+        batch = self._rows[self.offset : self.offset + frame_size]
         out = [{c: _json_value(r[c]) for c in self.columns} for r in batch]
         self.offset += len(batch)
-        # a short batch IS exhaustion; a full one peeks ahead one row so
-        # `done` is exact (Avatica frames carry a definitive done flag)
-        done = len(batch) < frame_size
-        if not done:
-            peek = next(self._rows, None)
-            if peek is None:
-                done = True
-            else:
-                self._rows = itertools.chain([peek], self._rows)
-        return out, done
+        return out, self.offset >= len(self._rows)
 
 
 class ReadServer:
@@ -115,7 +129,7 @@ class ReadServer:
         self.max_rows = max_rows
         self.frame_size = frame_size
         # abandoned cursors (client paged partway and left) would otherwise
-        # pin their iterators forever; bound them and evict oldest-first,
+        # pin their rows forever; bound them and evict oldest-first,
         # the way an Avatica server bounds open statements per connection
         self.max_statements = max_statements
         self._httpd: Optional[ThreadingHTTPServer] = None
@@ -145,11 +159,14 @@ class ReadServer:
             return 400, {"error": str(e)}
         try:
             df = self.tenant.sql(sql, max_rows=limit)
-            cursor = _Cursor(df.columns, df.toLocalIterator())
+            dup_error = _duplicate_columns_error(df.columns)
+            if dup_error:
+                return 400, {"error": dup_error}
+            cursor = _Cursor(df.columns, df.collect())
             rows, done = cursor.next_frame(frame_size)
         except ReadOnlyViolation as e:
             return 400, {"error": str(e)}
-        except Exception as e:  # analysis errors -> client problem, not 500
+        except Exception as e:  # analysis/execution errors -> client problem, not 500
             return 400, {"error": f"{type(e).__name__}: {e}"}
         payload = {"columns": cursor.columns, "rows": rows, "offset": 0, "done": done}
         if not done:
@@ -186,21 +203,16 @@ class ReadServer:
             )
         except ValueError as e:
             return 400, {"error": str(e)}
-        try:
-            with cursor.lock:
-                offset = body.get("offset", cursor.offset)
-                if offset != cursor.offset:
-                    # forward-only, like Avatica: rewinding means re-executing
-                    return 400, {
-                        "error": f"offset {offset} not at cursor position {cursor.offset}; "
-                        "cursors are forward-only — re-execute to rewind"
-                    }
-                frame_offset = cursor.offset
-                rows, done = cursor.next_frame(frame_size)
-        except Exception as e:  # mid-iteration Spark failure must still reply
-            with self._stmt_lock:
-                self._statements.pop(stmt_id, None)
-            return 500, {"error": f"{type(e).__name__}: {e}"}
+        with cursor.lock:
+            offset = body.get("offset", cursor.offset)
+            if offset != cursor.offset:
+                # forward-only, like Avatica: rewinding means re-executing
+                return 400, {
+                    "error": f"offset {offset} not at cursor position {cursor.offset}; "
+                    "cursors are forward-only — re-execute to rewind"
+                }
+            frame_offset = cursor.offset
+            rows, done = cursor.next_frame(frame_size)
         with self._stmt_lock:
             if done:
                 self._statements.pop(stmt_id, None)
@@ -241,7 +253,7 @@ class ReadServer:
                 self._reply(status, payload)
 
             def _reply(self, status: int, payload: dict) -> None:
-                data = json.dumps(payload).encode()
+                data = json.dumps(payload, allow_nan=False).encode()
                 self.send_response(status)
                 self.send_header("content-type", "application/json")
                 self.send_header("content-length", str(len(data)))

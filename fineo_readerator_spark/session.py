@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -57,6 +58,11 @@ def get_spark(app_name: str = "fineo-readerator-spark", shuffle_partitions: int 
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # a capped result (LIMIT, a tenant statement's max_rows) is taken
+        # by scanning this many partitions first, then more only if they
+        # held too few rows: one wave of task slots answers a selective
+        # lookup in one job instead of a 1-partition probe job and a second
+        .config("spark.sql.limit.initialNumPartitions", cpus)
     )
     return builder.getOrCreate()
 
@@ -120,3 +126,31 @@ def hadoop_fs(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str) -> DataFrame:
+    """A DataFrame over a few driver-built rows that plans as a JVM
+    ``LocalTableScan``.  ``spark.createDataFrame(list)`` plans a pickled
+    Python RDD instead, so every query over it starts Python worker tasks;
+    the Arrow path avoids those but its first use costs most of a second.
+
+    ``schema`` is a ``StructType`` or a DDL string, as in
+    ``createDataFrame``.  Cells reach the JVM as py4j converts them:
+    ``str``, ``None``, ``bool`` and ``int``, where a Python int within 32
+    bits arrives as an Integer, so it fits only an ``IntegerType``
+    column."""
+    jvm = spark.sparkContext._jvm
+    new_array = spark.sparkContext._gateway.new_array
+    # resolve each JVM class once: every lookup through ``jvm`` is a round trip
+    obj, row_factory = jvm.java.lang.Object, jvm.org.apache.spark.sql.RowFactory
+    jrows = jvm.java.util.ArrayList()
+    for row in rows:
+        cells = new_array(obj, len(row))
+        for i, v in enumerate(row):
+            cells[i] = v
+        jrows.add(row_factory.create(cells))
+    if isinstance(schema, str):
+        jschema = jvm.org.apache.spark.sql.types.StructType.fromDDL(schema)
+    else:
+        jschema = spark._jsparkSession.parseDataType(schema.json())
+    return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)

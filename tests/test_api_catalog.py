@@ -259,3 +259,25 @@ def test_alter_session_enforces_range_and_canonical_form(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def test_info_schema_and_empty_metric_views_are_jvm_local(tenant, spark):
+    """The views built from driver-side rows plan as a LocalTableScan, never
+    a pickled Python RDD scan (ExistingRDD), so reading them starts no
+    Python worker tasks."""
+    from fineo_readerator_spark.recombinator import build_metric_df
+
+    st = SchemaStore()
+    st.register_metric(
+        MetricSchema(org=ORG, metric="nosrc", fields=[FieldDef("f_int", "int")], track_unknown=True)
+    )
+    empty = build_metric_df(spark, st, ORG, "nosrc")
+    assert empty.collect() == [] and empty.columns == ["timestamp", "f_int", "_fm"]
+    views = [
+        tenant.sql(f"SELECT * FROM information_schema_{v}")
+        for v in ("catalogs", "schemata", "tables", "columns")
+    ]
+    for df in views + [empty]:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert dict(views[3].dtypes)["ordinal_position"] == "int"

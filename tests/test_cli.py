@@ -56,3 +56,19 @@ def test_cli_loads_serialized_store(spark, sf_dir, tmp_path, capsys):
 
 def test_cli_requires_exactly_one_bootstrap(spark, capsys):
     assert main(["SELECT 1"], spark=spark) == 2
+
+
+def test_cli_refuses_duplicate_columns_and_writes_strict_json(spark, sf_dir, capsys):
+    """Rows print as maps, so a repeated output name is refused rather than
+    silently dropping a column; NaN prints as a string, not a bare token."""
+    rc = main(
+        ["SELECT event_id AS id, user_id AS id FROM events", "--sf-dir", sf_dir], spark=spark
+    )
+    assert rc == 1 and "duplicate output column names ['id']" in capsys.readouterr().err
+
+    def refuse(token):
+        raise ValueError(token)
+
+    rc = main(["SELECT double('NaN') AS n", "--sf-dir", sf_dir], spark=spark)
+    (line,) = capsys.readouterr().out.strip().splitlines()
+    assert rc == 0 and json.loads(line, parse_constant=refuse) == {"n": "NaN"}

@@ -37,6 +37,21 @@ def server(spark, tmp_path_factory):
     srv.stop()
 
 
+def _small_server(spark, tmp_path, **kw) -> ReadServer:
+    """A handle()-level server over one 6-row metric ``m`` (f_int 0..5)."""
+    rows = [
+        {"companykey": ORG, "metrictype": "m", "timestamp": i, "writetime": i, "f_int": i}
+        for i in range(6)
+    ]
+    spark.createDataFrame(
+        rows, "companykey string, metrictype string, timestamp long, writetime long, f_int int"
+    ).write.mode("overwrite").parquet(str(tmp_path / "h"))
+    st = SchemaStore()
+    st.register_metric(MetricSchema(org=ORG, metric="m", fields=[FieldDef("f_int", "int")]))
+    st.add_source(ORG, "m", SourceSpec(kind="historical", path=str(tmp_path / "h")))
+    return ReadServer(TenantSession(spark, st, ORG), api_key=KEY, **kw)
+
+
 def _post(url, body, key=KEY, path="/query"):
     req = urllib.request.Request(
         f"{url}{path}",
@@ -124,24 +139,9 @@ def test_paging_single_frame_has_no_statement(server):
 
 def test_statement_cap_evicts_oldest(spark, tmp_path):
     """Opening more cursors than max_statements closes the oldest, so
-    abandoned clients cannot pin iterators forever (handle() used directly —
+    abandoned clients cannot pin their rows forever (handle() used directly —
     the transport adds nothing here)."""
-    from fineo_readerator_spark.api import TenantSession
-    from fineo_readerator_spark.schema_store import FieldDef, MetricSchema, SchemaStore
-    from fineo_readerator_spark.server import ReadServer
-    from fineo_readerator_spark.sources import SourceSpec
-
-    rows = [
-        {"companykey": ORG, "metrictype": "m", "timestamp": i, "writetime": i, "f_int": i}
-        for i in range(6)
-    ]
-    spark.createDataFrame(
-        rows, "companykey string, metrictype string, timestamp long, writetime long, f_int int"
-    ).write.mode("overwrite").parquet(str(tmp_path / "h"))
-    st = SchemaStore()
-    st.register_metric(MetricSchema(org=ORG, metric="m", fields=[FieldDef("f_int", "int")]))
-    st.add_source(ORG, "m", SourceSpec(kind="historical", path=str(tmp_path / "h")))
-    srv = ReadServer(TenantSession(spark, st, ORG), api_key=KEY, max_statements=2)
+    srv = _small_server(spark, tmp_path, max_statements=2)
 
     opened = []
     for _ in range(3):
@@ -180,17 +180,7 @@ def test_fetch_refreshes_lru_recency(spark, tmp_path):
     """An actively-paging cursor survives statement churn: each successful
     fetch refreshes its recency so eviction is LRU, not insertion-ordered
     (ADVICE r4)."""
-    rows = [
-        {"companykey": ORG, "metrictype": "m", "timestamp": i, "writetime": i, "f_int": i}
-        for i in range(6)
-    ]
-    spark.createDataFrame(
-        rows, "companykey string, metrictype string, timestamp long, writetime long, f_int int"
-    ).write.mode("overwrite").parquet(str(tmp_path / "h"))
-    st = SchemaStore()
-    st.register_metric(MetricSchema(org=ORG, metric="m", fields=[FieldDef("f_int", "int")]))
-    st.add_source(ORG, "m", SourceSpec(kind="historical", path=str(tmp_path / "h")))
-    srv = ReadServer(TenantSession(spark, st, ORG), api_key=KEY, max_statements=2)
+    srv = _small_server(spark, tmp_path, max_statements=2)
 
     status, a = srv.handle(KEY, {"sql": "SELECT f_int FROM m", "frame_size": 2})
     status, b = srv.handle(KEY, {"sql": "SELECT f_int FROM m", "frame_size": 2})
@@ -211,25 +201,84 @@ def test_fetch_refreshes_lru_recency(spark, tmp_path):
     assert status == 404
 
 
-def test_fetch_mid_iteration_failure_returns_500_and_closes(spark):
-    """A Spark error raised while draining toLocalIterator must produce a
-    500 JSON reply (not a dropped connection) and release the cursor."""
-    from fineo_readerator_spark.server import _Cursor
+def test_execution_failure_replies_json_error_and_leaves_no_statement(spark, tmp_path):
+    """A statement executes in full at /query, so a Spark error raised while
+    executing, even on rows past the first frame, comes back as a JSON error
+    reply from /query, and no statement is left open to page."""
+    srv = _small_server(spark, tmp_path)
+    status, out = srv.handle(
+        KEY,
+        {
+            "sql": "SELECT f_int, CASE WHEN f_int > 2 THEN raise_error('executor lost') END AS x "
+            "FROM m ORDER BY f_int",
+            "frame_size": 2,
+        },
+    )
+    assert status == 400 and "executor lost" in out["error"]
+    assert "statement_id" not in out and srv._statements == {}
 
-    st = SchemaStore()
-    st.register_metric(MetricSchema(org=ORG, metric="m", fields=[FieldDef("f_int", "int")]))
-    srv = ReadServer(TenantSession(spark, st, ORG), api_key=KEY)
 
-    def boom():
-        yield {"f_int": 1}
-        raise RuntimeError("executor lost")
+def test_duplicate_output_columns_rejected(spark, tmp_path):
+    """Rows are maps keyed by column name: two columns named ``id`` would
+    silently lose one column's values, so the statement is refused."""
+    srv = _small_server(spark, tmp_path)
+    status, out = srv.handle(
+        KEY, {"sql": "SELECT f_int AS id, timestamp AS id, f_int FROM m WHERE f_int = 1"}
+    )
+    assert status == 400 and "duplicate output column names ['id']" in out["error"]
+    assert srv._statements == {}
 
-    srv._statements["s1"] = _Cursor(["f_int"], iter(boom()))
-    status, out = srv.handle(KEY, {"statement_id": "s1", "frame_size": 5}, "/fetch")
-    assert status == 500 and "executor lost" in out["error"]
-    # cursor released: a retry is a clean 404, not a wedged statement
-    status, _ = srv.handle(KEY, {"statement_id": "s1"}, "/fetch")
-    assert status == 404
+
+def test_non_finite_doubles_are_strict_json(server):
+    """NaN and the infinities have no JSON literal: they go out as strings,
+    and the reply parses under a parser that refuses the non-standard
+    ``NaN``/``Infinity`` tokens."""
+    req = urllib.request.Request(
+        f"{server}/query",
+        data=json.dumps(
+            {"sql": "SELECT double('NaN') AS n, double('Infinity') AS p, "
+             "-double('Infinity') AS m, array(double('NaN'), 1.5D) AS a"}
+        ).encode(),
+        headers={"x-api-key": KEY},
+    )
+
+    def refuse(token):
+        raise ValueError(f"non-standard JSON constant {token}")
+
+    with urllib.request.urlopen(req) as resp:
+        out = json.loads(resp.read(), parse_constant=refuse)
+    assert out["rows"] == [{"n": "NaN", "p": "Infinity", "m": "-Infinity", "a": ["NaN", 1.5]}]
+
+
+def _spark_counts(spark) -> tuple[int, int]:
+    """(jobs, stages) the scheduler has started so far."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    return dag.nextJobId(), dag.nextStageId()
+
+
+def test_statement_runs_one_job_of_one_stage(spark, sf_dir):
+    """A statement is one action over its capped plan, through handle() on
+    a two-source (historical + nearline) metric: a point lookup takes its
+    rows in one job (the first take scans a whole wave of partitions), and
+    ORDER BY ... LIMIT k is one stage (collect merges the per-partition
+    top-k on the driver; a streaming cursor shuffles them first)."""
+    from fineo_readerator_spark.plans.metric_queries import ORG as EVENTS_ORG, events_store
+
+    store = events_store(sf_dir, split=True)
+    assert len(store.get_sources(EVENTS_ORG, "events")) == 2
+    srv = ReadServer(TenantSession(spark, store, EVENTS_ORG), api_key=KEY)
+    point = "SELECT timestamp, event_id, user_id, value FROM events WHERE event_id = 7"
+    lastn = (
+        "SELECT timestamp, event_id, value FROM events "
+        "ORDER BY timestamp DESC, event_id DESC LIMIT 20"
+    )
+    for sql, n_rows in ((point, 1), (lastn, 20)):
+        srv.handle(KEY, {"sql": sql})  # warm: first-use planning may run jobs
+        jobs0, stages0 = _spark_counts(spark)
+        status, out = srv.handle(KEY, {"sql": sql})
+        jobs1, stages1 = _spark_counts(spark)
+        assert status == 200 and len(out["rows"]) == n_rows, out
+        assert (jobs1 - jobs0, stages1 - stages0) == (1, 1), sql
 
 
 def test_paging_offset_is_forward_only(server):

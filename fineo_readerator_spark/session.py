@@ -17,12 +17,20 @@ from pyspark.sql.types import StructType
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def get_spark(app_name: str = "fineo-readerator-spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(
+    app_name: str = "fineo-readerator-spark",
+    shuffle_partitions: int | None = None,
+    extra_confs: dict[str, str] | None = None,
+) -> SparkSession:
     """Return (or create) a SparkSession with engine defaults.
 
     On a real cluster the master/memory settings come from spark-submit; only
     the semantic + optimizer configs here matter. ``spark.sql.shuffle.partitions``
     is a floor — AQE coalesces small partitions back down at runtime.
+    ``extra_confs`` are set on the builder after the engine defaults, for a
+    tool that needs the same engine plus its own instrumentation (an event
+    log); like every builder conf they apply only when this call creates the
+    session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
@@ -63,8 +71,31 @@ def get_spark(app_name: str = "fineo-readerator-spark", shuffle_partitions: int 
         # held too few rows: one wave of task slots answers a selective
         # lookup in one job instead of a 1-partition probe job and a second
         .config("spark.sql.limit.initialNumPartitions", cpus)
+        # compiled generated classes are cached by their source text, LRU,
+        # 100 entries by default.  One pass of perfbench's batch_registry
+        # subset compiles 148 distinct classes and one pass of the 53 bench
+        # queries at sf0.001 about 1010, so at 100 every repeated pass
+        # recompiled nearly all of them (Janino time on the driver, then
+        # tasks running freshly loaded, not-yet-JIT-compiled code).  At 1000
+        # a steady bench pass still recompiled 464-477 (the cache splits
+        # into 4 LRU segments of 250); at 2000 it recompiles 10-24, the
+        # classes whose source is never reused.  A cached class retains
+        # about 20 KB of heap, so the cache stays under about 40 MB.  A
+        # static conf: it takes effect only in a session this function
+        # creates, and only if nothing in this JVM generated code before —
+        # ensure_io_confs cannot apply it to a session the driver hands in.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
+    for k, v in (extra_confs or {}).items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled so far in this JVM: a count that moves
+    only when a plan's generated code missed the compiled-class cache."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 # Confs that every parquet read in this repo REQUIRES, and that are

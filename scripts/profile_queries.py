@@ -10,9 +10,12 @@ clock to jobs / stages / tasks:
 
 Output per query: build-time (plan construction incl. any eager jobs),
 noop-write time for two consecutive runs (run 2 = steady state), number of
-jobs/stages/tasks, summed executor task time, and the per-stage breakdown of
-the slowest stages.  This is a diagnosis tool, NOT the bench: numbers are
-comparable to each other, not to bench.py (event logging adds overhead).
+jobs/stages/tasks, summed executor task time, the per-stage breakdown of
+the slowest stages, and the generated classes compiled during the build, run 1
+and run 2 (a steady run 2 that recompiles shows codegen-cache misses as a
+count).  The session is ``get_spark``'s engine plus an event log.  This is a
+diagnosis tool, NOT the bench: numbers are comparable to each other, not to
+bench.py (event logging adds overhead).
 """
 
 from __future__ import annotations
@@ -28,50 +31,19 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from fineo_readerator_spark.plans.queries import QUERIES  # noqa: E402
+from fineo_readerator_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 EVDIR = "/tmp/spark-events-profile"
 
 
 def get_profiling_spark():
-    from pyspark.sql import SparkSession
-
-    from fineo_readerator_spark.session import get_spark  # noqa: F401
-
     os.makedirs(EVDIR, exist_ok=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName("fineo-profile")
-        .master(f"local[{cpus}]")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-    )
-    # mirror get_spark's perf/semantic confs by building through it after
-    # setting the extra configs on the builder is not possible post-create;
-    # instead replicate: import the module-level conf list via get_spark's
-    # builder by monkeypatching is overkill — just copy the confs here.
-    from fineo_readerator_spark import session as S
-
-    confs = {
-        "spark.sql.shuffle.partitions": str(S.DEFAULT_SHUFFLE_PARTITIONS),
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.ansi.enabled": "true",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.parquet.filterPushdown": "true",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.parquet.aggregatePushdown": "true",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        "spark.ui.enabled": "false",
-        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    }
-    for k, v in confs.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return get_spark("fineo-profile", extra_confs={
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": EVDIR,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    })
 
 
 def parse_event_log(app_dir: Path):
@@ -179,15 +151,18 @@ def main() -> None:
         q = QUERIES[name]
         # run 1: cold (codegen etc.) — not recorded per-stage
         sc.setJobGroup(f"{name}::warm", name)
+        c0 = codegen_compiles(spark)
         try:
             t0 = time.perf_counter()
             df = q.fn(spark, sf_dir)
             t_build1 = time.perf_counter() - t0
+            c1 = codegen_compiles(spark)
             df.write.format("noop").mode("overwrite").save()
             t_warm = time.perf_counter() - t0
         except Exception as exc:
             results[name] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
             continue
+        c2 = codegen_compiles(spark)
         # run 2: steady state, attributed
         sc.setJobGroup(f"{name}::steady", name)
         t0 = time.perf_counter()
@@ -200,6 +175,9 @@ def main() -> None:
             "total_cold_s": round(t_warm, 3),
             "build_steady_s": round(t_build2, 3),
             "total_steady_s": round(t_steady, 3),
+            # generated classes compiled: a steady run that reuses the
+            # cached classes compiles none
+            "compiles": {"build": c1 - c0, "run1": c2 - c1, "run2": codegen_compiles(spark) - c2},
         }
         sc.setJobGroup("", "")
     spark.catalog.clearCache()

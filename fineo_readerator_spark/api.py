@@ -30,15 +30,15 @@ class ReadOnlyViolation(Exception):
 
 _READ_STATEMENTS = ("select", "with", "values", "explain", "show", "describe", "table")
 _COMMENT = re.compile(r"(--[^\n]*\n?)|(/\*.*?\*/)", re.DOTALL)
+# the first keyword, after any opening parentheses: `(SELECT 1)`, `SELECT(1)`
+_FIRST_WORD = re.compile(r"[(\s]*(\w*)")
 
 
 def assert_read_only(sql: str) -> None:
     head = _COMMENT.sub(" ", sql).strip()
     if not head:
         raise ReadOnlyViolation("empty statement")
-    first = head.split(None, 1)[0].lower().rstrip("(")
-    if first == "(":
-        first = head.lstrip("( \t\n").split(None, 1)[0].lower()
+    first = _FIRST_WORD.match(head).group(1).lower()
     if first not in _READ_STATEMENTS:
         raise ReadOnlyViolation(
             f"statement {first.upper()!r} rejected: this engine is read-only"

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fineo_readerator_spark.llm_ops.textstats import tokens
+from fineo_readerator_spark.session import is_local_master
 
 # modulus for the universal hash family: prime > 2^32, products stay < 2^62
 _MERSENNE_P = 4294967311
@@ -39,9 +40,11 @@ def _spread(df: DataFrame) -> DataFrame:
     partitions ≫ cores and the same repartition would be a full shuffle of
     the corpus — skip it entirely.  (Deciding from the actual partition count
     via ``df.rdd`` would force a plan→RDD conversion costing ~0.5 s of driver
-    time per query build, which dominates these sub-second local queries.)"""
+    time per query build, which dominates these sub-second local queries.)
+    Local means ``session.is_local_master``: ``local-cluster[...]`` has
+    separate executor JVMs and is skipped like a cluster."""
     sc = df.sparkSession.sparkContext
-    if sc.master.startswith("local"):
+    if is_local_master(sc.master):
         return df.repartition(sc.defaultParallelism)
     return df
 

@@ -20,6 +20,10 @@ import random
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from fineo_readerator_spark.llm_ops.dedup import _spread
+from fineo_readerator_spark.session import is_local_master
 
 
 # The DuckDB-side cosine that matches this module's Spark expression shape
@@ -65,6 +69,12 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _cos_normed(va: str, vb: str, na: str, nb: str, digits: int) -> Column:
+    """Rounded cosine of two vector columns whose norms ``na``/``nb`` were
+    computed once per row: a pair join must not recompute them per pair."""
+    return F.round(_dot(F.col(va), F.col(vb)) / (F.col(na) * F.col(nb)), digits)
 
 
 def cosine_topk(
@@ -113,8 +123,6 @@ def mmr_rerank(
     exactly-rounded IEEE operation on identical operands — so the python
     walk, the Spark values and the DuckDB unrolled replay pick identical
     winners; ties break to the smaller id.  Output (rank, id, rel)."""
-    import math
-
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam must be in [0, 1], got {lam}")
     if k < 1 or shortlist < k:
@@ -181,6 +189,13 @@ def mmr_rerank(
     )
 
 
+def _exact_sum(x: Column) -> Column:
+    """Order-independent sum of doubles: every term rounded at 1e-12 and
+    summed as exact ``decimal(38,12)``, then back to double — the same value
+    whatever the partitioning, and the same as the DuckDB replay."""
+    return F.sum(F.round(x, 12).cast("decimal(38,12)")).cast("double")
+
+
 def _modal_dim(df: DataFrame, vec_col: str) -> int:
     """Authoritative embedding dimension of a corpus: the MOST COMMON vector
     size among non-NULL vectors (ties → smaller size, deterministic).  Using
@@ -204,6 +219,15 @@ def _modal_dim(df: DataFrame, vec_col: str) -> int:
             "embedding dimension (pass dim= explicitly or fix the input)"
         )
     return int(rows[0]["__d"])
+
+
+def _rankable(df: DataFrame, vec_col: str, dim: int | None = None) -> tuple[DataFrame, int]:
+    """The rows whose vector is non-NULL and of dimension ``dim`` (by
+    default the :func:`_modal_dim`), and that dimension."""
+    df = df.filter(F.col(vec_col).isNotNull())
+    if dim is None:
+        dim = _modal_dim(df, vec_col)
+    return df.filter(F.size(vec_col) == dim), dim
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -238,17 +262,16 @@ def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
     same cross-engine guard as ``_cells_array_sql``: a projection within
     float-noise of 0 must not flip its bit when another engine's summation
     order drifts by an ulp."""
-    bits = []
-    for i, p in enumerate(planes):
-        bits.append(
-            F.when(F.round(_dot(vec, _vec_lit(p)), 9) >= 0, F.lit(1 << i)).otherwise(
-                F.lit(0)
-            )
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
+    return _sign_bits([F.round(_dot(vec, _vec_lit(p)), 9) for p in planes])
+
+
+def _sign_bits(dots: list[Column]) -> Column:
+    """Bit ``i`` set iff plane ``i``'s (rounded) projection is ``>= 0``."""
+    sig = None
+    for i, d in enumerate(dots):
+        bit = F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0))
+        sig = bit if sig is None else sig.bitwiseOR(bit)
+    return sig
 
 
 def lsh_bucketed_topk(
@@ -412,11 +435,7 @@ def lsh_probe_cells_expr(
     true neighbors most plausibly landed on).  Margin ties break to the
     lower plane index, so the probe list is deterministic."""
     dots = [F.round(_dot(F.col(vec_col), _vec_lit(p)), 9) for p in planes]
-    sig: Column | None = None
-    for i, d in enumerate(dots):
-        bit = F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        sig = bit if sig is None else sig.bitwiseOR(bit)
-    sig = sig.cast("long")
+    sig = _sign_bits(dots).cast("long")
     if n_probe == 1:
         return F.array(sig)
     margins = F.array_sort(
@@ -538,7 +557,7 @@ def embedding_decontaminate(
         c.join(F.broadcast(e), "sig")
         .withColumn(
             "__sim",
-            F.round(_dot(F.col("v"), F.col("ev")) / (F.col("__nc") * F.col("__ne")), round_digits),
+            _cos_normed("v", "ev", "__nc", "__ne", round_digits),
         )
         .filter(F.col("__sim") >= threshold)
         .groupBy("id")
@@ -702,12 +721,12 @@ def _in_cell_join(
     WindowGroupLimit partial run at core width and no pair-sized frame
     crosses an exchange (the plain cell join AQE-coalesces its byte-tiny
     exchanges to 1-2 partitions, serializing all O(Σ|cell|²) arithmetic).
-    Everywhere else — real clusters, `local-cluster[...]`, or an unknown /
-    over-bound build-side count — the cell-keyed shuffle join."""
+    Everywhere else — a master ``session.is_local_master`` refuses (real
+    clusters, ``local-cluster[...]``) or an unknown / over-bound
+    build-side count — the cell-keyed shuffle join."""
     sc = a.sparkSession.sparkContext
-    is_local = sc.master == "local" or sc.master.startswith("local[")
     if (
-        is_local
+        is_local_master(sc.master)
         and n_build_rows is not None
         and n_build_rows <= _LOCAL_BROADCAST_MAX_ROWS
     ):
@@ -746,17 +765,12 @@ def semantic_dedup_assigned(
     # (higher-order-function aggregates evaluate interpreted).  Hoisting is
     # bit-identical — same expression, same operand order, same rounding —
     # so the oracle match is unaffected.
-    a = assigned.select(
-        F.col(cell_col).alias("__cell"),
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("v_a"),
-        _norm(F.col(vec_col)).alias("__na"),
-    )
-    b = assigned.select(
-        F.col(cell_col).alias("__cell"),
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("v_b"),
-        _norm(F.col(vec_col)).alias("__nb"),
+    a, b = (
+        assigned.select(
+            F.col(cell_col).alias("__cell"), F.col(id_col).alias(f"id_{s}"),
+            F.col(vec_col).alias(f"v_{s}"), _norm(F.col(vec_col)).alias(f"__n{s}"),
+        )
+        for s in "ab"
     )
     # Broadcast-at-core-width on local masters, size-gated — see
     # _in_cell_join (the broadcast side is the whole assigned projection;
@@ -765,11 +779,7 @@ def semantic_dedup_assigned(
     # above the row bound, the cell-keyed shuffle join is the right plan.
     paired = _in_cell_join(a, b, "__cell", n_rows)
     scored = paired.filter(F.col("id_b") < F.col("id_a")).select(
-        F.col("id_a"),
-        F.round(
-            _dot(F.col("v_a"), F.col("v_b")) / (F.col("__na") * F.col("__nb")),
-            round_digits,
-        ).alias("cos_sim"),
+        F.col("id_a"), _cos_normed("v_a", "v_b", "__na", "__nb", round_digits).alias("cos_sim")
     )
     dominated = (
         scored.filter(F.col("cos_sim") >= threshold)
@@ -848,8 +858,6 @@ def semantic_dedup(
     # gate its N without a second corpus scan (the gate still fires BEFORE
     # any join work starts).  _spread: the argmin is interpreted
     # O(C·dim)/row CPU that a 1-2 partition local scan would serialize.
-    from fineo_readerator_spark.llm_ops.dedup import _spread
-
     assigned = _spread(df).withColumn(
         "cell", seeded_cell_expr(vec_col, seeds)
     ).localCheckpoint(eager=True)
@@ -892,12 +900,7 @@ def semantic_dedup_lsh(
     work stays O(N · target).  Deterministic planes (seeded Gaussian) and
     sign-bit arithmetic are SQL-replayable, so this stays oracle-checked.
     Appends ``cell`` (the signature bucket)."""
-    import math
-
-    df = df.filter(F.col(vec_col).isNotNull())
-    if dim is None:
-        dim = _modal_dim(df, vec_col)
-    df = df.filter(F.size(vec_col) == dim)
+    df, dim = _rankable(df, vec_col, dim)
     if n_planes is None:
         n_rows = df.count()
         n_planes = max(
@@ -909,8 +912,6 @@ def semantic_dedup_lsh(
     # _spread: n_planes interpreted dot products per row — the dominant CPU
     # of the whole operator at sf0.1 (measured multi-second on the 2-task
     # local scan) — must not serialize on the input's 1-2 scan partitions
-    from fineo_readerator_spark.llm_ops.dedup import _spread
-
     assigned = _spread(df).withColumn(
         "cell", hyperplane_signature(F.col(vec_col), planes).cast("long")
     ).localCheckpoint(eager=True)
@@ -918,8 +919,6 @@ def semantic_dedup_lsh(
         assigned, "cell", "semantic_dedup_lsh", max_rows_per_cell,
         allow_oversized_cells,
     )
-    if n_rows is None:  # gate skipped (allow_oversized): count is one cheap
-        n_rows = assigned.count()  # job over the materialized checkpoint
     return semantic_dedup_assigned(
         assigned, id_col, vec_col, "cell", threshold, round_digits,
         n_rows=n_rows,
@@ -932,18 +931,18 @@ def _gate_measured_occupancy(
     op: str,
     max_rows_per_cell: int,
     allow_oversized_cells: bool,
-) -> int | None:
+) -> int:
     """Hyperplane buckets skew when the embedding distribution has a
     dominant mean direction (most rows share most sign bits), so the LSH
     paths gate on MEASURED occupancy, not the N/cells estimate the seeded
     paths use — one cheap agg over the checkpointed assignment, fired
     BEFORE the O(rows_per_cell²) in-cell join starts.  With
     ``allow_oversized_cells`` the agg itself is skipped (its result would
-    be discarded) and None is returned.  Returns the TOTAL row count
-    otherwise — callers reuse it to size-gate the local broadcast join
-    without a second job."""
+    be discarded) for one cheap count over the checkpointed assignment.
+    Returns the TOTAL row count — callers reuse it to size-gate the local
+    broadcast join without a second job."""
     if allow_oversized_cells:
-        return None
+        return assigned.count()
     row = (
         assigned.groupBy(cell_col)
         .count()
@@ -1016,8 +1015,6 @@ def knn_graph(
     per-node top-``k`` — ``row_number() <= k`` compiles to WindowGroupLimit,
     so each mapper keeps a k-row heap per node and the exchange carries
     O(N·k) rows, not the O(Σ|cell|²) pair set."""
-    from pyspark.sql.window import Window
-
     # NULL embeddings would seed/assign as NULL cells and silently vanish;
     # wrong-dimension vectors would get NULL cell distances; zero-norm
     # vectors would emit cos_sim=NULL edges ranked NULLS-LAST inside small
@@ -1028,12 +1025,9 @@ def knn_graph(
     # empty/all-NULL corpus raises a clear ValueError instead of IndexError.
     if n_probe < 1:
         raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    df = df.filter(F.col(vec_col).isNotNull())
     if neg_label_col is not None:
         df = df.filter(F.col(neg_label_col).isNotNull())
-    if dim is None:
-        dim = _modal_dim(df, vec_col)
-    df = df.filter(F.size(vec_col) == dim)
+    df, dim = _rankable(df, vec_col, dim)
     if n_centroids is None:
         # DEFAULT path: hyperplane-LSH cells.  One count sizes the plane
         # set (buckets grow linearly with the corpus, in-cell join volume
@@ -1042,8 +1036,6 @@ def knn_graph(
         # O(N²·dim/target) nearest-of-C scan (the measured 100× hazard).
         # The count runs only when auto-sizing (semantic_dedup_lsh's rule):
         # a pinned plane set must not pay a corpus pass for it.
-        import math
-
         if n_planes is None:
             n_rows = df.count()
             if n_rows == 0:
@@ -1077,8 +1069,6 @@ def knn_graph(
     # single-cell graph with an identical plan shape.  _spread: the probe
     # argmin is interpreted O(C·dim)/row CPU — don't serialize it on the
     # input's 1-2 local scan partitions.
-    from fineo_readerator_spark.llm_ops.dedup import _spread
-
     assigned = (
         _spread(df)
         .withColumn("__probes", probes_col)
@@ -1090,8 +1080,6 @@ def knn_graph(
             assigned, "__cell", "knn_graph", max_rows_per_cell,
             allow_oversized_cells,
         )
-        if n_rows_assigned is None:  # gate skipped (allow_oversized):
-            n_rows_assigned = assigned.count()  # cheap post-checkpoint job
     else:
         n_rows_assigned = assigned.count()
         _gate_cell_sizing(
@@ -1129,10 +1117,7 @@ def knn_graph(
     pairs = pairs.select(
         F.col("__src"),
         F.col("__nbr"),
-        F.round(
-            _dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
-            round_digits,
-        ).alias("cos_sim"),
+        _cos_normed("__va", "__vb", "__na", "__nb", round_digits).alias("cos_sim"),
     )
     w = Window.partitionBy("__src").orderBy(F.desc("cos_sim"), F.col("__nbr"))
     return (
@@ -1176,6 +1161,60 @@ def hard_negatives(
     ).withColumnRenamed("nbr_id", "neg_id")
 
 
+def _walk_edges(
+    df: DataFrame,
+    graph: DataFrame | None,
+    k: int,
+    n_centroids: int | None,
+    id_col: str,
+    vec_col: str,
+    n_probe: int,
+) -> DataFrame:
+    """The ``(__src, __nbr)`` edges a graph walk runs over.  ``graph``
+    (``(id_col, nbr_id)`` rows — e.g. a persisted knn-graph layout read back
+    from parquet) is re-attached as is: at 100 TB the graph build dominates
+    every consumer, so it materializes ONCE per (corpus, k, cells, n_probe)
+    and rank/label/audit queries re-attach (the IVF/bucketed-layout
+    lifecycle).  Otherwise :func:`knn_graph` builds it once, lineage-cut
+    because every round consumes it."""
+    cols = (F.col(id_col).alias("__src"), F.col("nbr_id").alias("__nbr"))
+    if graph is not None:
+        return graph.select(*cols)
+    return knn_graph(
+        df, k=k, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col, n_probe=n_probe
+    ).select(*cols).localCheckpoint(eager=False)
+
+
+def _node_set(edges: DataFrame, a: str, b: str, out: str) -> DataFrame:
+    """The distinct ids on either end of an edge frame, as one ``out`` column."""
+    return edges.select(F.col(a).alias(out)).union(edges.select(F.col(b).alias(out))).distinct()
+
+
+def _undirected_edges(edges: DataFrame, id_col: str) -> DataFrame:
+    """The DISTINCT undirected ``(u < v)`` edge set of a directed ``(id_col,
+    nbr_id)`` frame, self-loops dropped; lineage-cut, every consumer reads
+    it more than once."""
+    return (
+        edges.select(
+            F.least(id_col, "nbr_id").alias("u"),
+            F.greatest(id_col, "nbr_id").alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _undirected_degree(und: DataFrame) -> DataFrame:
+    """``(node, degree)``: each node's edge count in an undirected ``(u, v)`` set."""
+    return (
+        und.select(F.col("u").alias("node"))
+        .unionAll(und.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
+
+
 def label_propagation(
     df: DataFrame,
     seed_label: Column,
@@ -1200,26 +1239,18 @@ def label_propagation(
     the full ``n_iters`` walk is SQL-unrollable and oracle-checked.
 
     Scale shape: the graph builds ONCE (cell-bounded, O(N·k) edges —
-    :func:`knn_graph`) and each round is one edge×label join (k-regular:
-    ≤ N·k rows) plus one (node, label) count agg; the label frame is
-    lineage-cut per round (the iterative-algorithm pattern k-means uses)
-    so round t+1's plan does not replay round t.  Output ``(id, label,
-    origin)`` with origin ∈ seed/propagated/unlabeled."""
-    from pyspark.sql.window import Window
-
-    if graph is not None:
-        # persisted-layout re-attach: same contract as pagerank's graph=
-        g = graph.select(F.col(id_col).alias("__node"), F.col("nbr_id").alias("__nbr"))
-    else:
-        g = knn_graph(
-            df, k=k, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col, n_probe=n_probe
-        ).select(F.col(id_col).alias("__node"), F.col("nbr_id").alias("__nbr"))
-        g = g.localCheckpoint(eager=False)  # one build, consumed every round
+    :func:`knn_graph`; or pass ``graph=`` to re-attach a persisted layout)
+    and each round is one edge×label join (k-regular: ≤ N·k rows) plus one
+    (node, label) count agg; the label frame is lineage-cut per round (the
+    iterative-algorithm pattern k-means uses) so round t+1's plan does not
+    replay round t.  Output ``(id, label, origin)`` with origin ∈
+    seed/propagated/unlabeled."""
+    g = _walk_edges(df, graph, k, n_centroids, id_col, vec_col, n_probe)
     seeds = df.select(
         F.col(id_col).alias("__id"), seed_label.alias("__seed")
     ).localCheckpoint(eager=False)
     labels = seeds.select("__id", "__seed", F.col("__seed").alias("__lab"))
-    w = Window.partitionBy("__node").orderBy(F.desc("__c"), "__vote")
+    w = Window.partitionBy("__src").orderBy(F.desc("__c"), "__vote")
     for _ in range(n_iters):
         votes = (
             g.join(
@@ -1228,13 +1259,13 @@ def label_propagation(
                 ),
                 "__nbr",
             )
-            .groupBy("__node", "__vote")
+            .groupBy("__src", "__vote")
             .agg(F.count(F.lit(1)).alias("__c"))
         )
         win = (
             votes.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
-            .select(F.col("__node").alias("__id"), F.col("__vote").alias("__win"))
+            .select(F.col("__src").alias("__id"), F.col("__vote").alias("__win"))
         )
         labels = (
             labels.join(win, "__id", "left")
@@ -1265,21 +1296,7 @@ def graph_triangles(edges: DataFrame, id_col: str = "vec_id") -> DataFrame:
     probe (Σ deg² work — O(N·k²) on a k-regular graph, never corpus²);
     ``clustering_ppm`` is the half-up integer ppm of ``2·triangles /
     (degree·(degree−1))``, 0 when degree < 2."""
-    und = (
-        edges.select(
-            F.least(id_col, "nbr_id").alias("u"),
-            F.greatest(id_col, "nbr_id").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionAll(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    und = _undirected_edges(edges, id_col)
     wedges = (
         und.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .join(und.select(F.col("u").alias("a"), F.col("v").alias("c")), "a")
@@ -1295,7 +1312,7 @@ def graph_triangles(edges: DataFrame, id_col: str = "vec_id") -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    return deg.join(per_node, "node", "left").select(
+    return _undirected_degree(und).join(per_node, "node", "left").select(
         F.col("node").alias(id_col),
         "degree",
         F.coalesce("triangles", F.lit(0).cast("long")).alias("triangles"),
@@ -1308,6 +1325,65 @@ def graph_triangles(edges: DataFrame, id_col: str = "vec_id") -> DataFrame:
             " div (cast(degree as decimal(38,0)) * (degree - 1) * 2) END"
         ).alias("clustering_ppm"),
     )
+
+
+def _rank_walk(
+    g: DataFrame, n_iters: int, damping: float, flags: DataFrame | None = None
+) -> DataFrame:
+    """The damped PageRank walk over ``(__src, __nbr)`` edges: ``(__id,
+    __r)``, plus ``__is_seed`` when ``flags`` (``(__id, __is_seed)`` rows)
+    names a seed set that alone receives teleport mass.  Without ``flags``
+    every graph node is a seed — global PageRank — and no seed join,
+    column or CASE enters the plan."""
+    deg = g.groupBy("__src").agg(F.count(F.lit(1)).alias("__deg"))
+    edges = g.join(deg, "__src").localCheckpoint(eager=False)
+    nodes, keep = _node_set(g, "__src", "__nbr", "__id"), ["__id"]
+    if flags is not None:
+        nodes = nodes.join(flags, "__id", "left").select(
+            "__id", F.coalesce("__is_seed", F.lit(False)).alias("__is_seed")
+        )
+        keep.append("__is_seed")
+    nodes = nodes.localCheckpoint(eager=True)
+    n = (nodes if flags is None else nodes.filter(F.col("__is_seed"))).count()
+    if n == 0:
+        raise ValueError(
+            "knn graph is empty: no edges to rank over"
+            if flags is None
+            else "personalized_pagerank: no graph node satisfies seed_pred"
+        )
+
+    def teleport(mass: Column) -> Column:  # seeds only; every node without flags
+        return mass if flags is None else F.when(F.col("__is_seed"), mass).otherwise(F.lit(0.0))
+
+    # teleport/damping literals come from the SAME python floats the oracle
+    # interpolates via repr() — 1-0.85 is 0.15000000000000002, not 0.15
+    tele, damp = 1.0 - damping, float(damping)
+    ranks = nodes.select(
+        *keep, teleport(F.round(F.lit(1.0) / F.lit(float(n)), 12)).alias("__r")
+    )
+    for _ in range(n_iters):
+        contrib = edges.join(
+            ranks.select(F.col("__id").alias("__src"), "__r"), "__src"
+        ).select(
+            "__nbr", F.round(F.col("__r") / F.col("__deg"), 12).alias("__c")
+        )
+        s = contrib.groupBy("__nbr").agg(
+            F.sum(F.col("__c").cast("decimal(38,12)")).alias("__s")
+        )
+        ranks = (
+            nodes.join(s, nodes["__id"] == s["__nbr"], "left")
+            .select(
+                *keep,
+                F.round(
+                    teleport(F.lit(tele) / F.lit(float(n)))
+                    + F.lit(damp)
+                    * F.coalesce(F.col("__s").cast("double"), F.lit(0.0)),
+                    12,
+                ).alias("__r"),
+            )
+            .localCheckpoint(eager=False)
+        )
+    return ranks
 
 
 def pagerank(
@@ -1328,71 +1404,22 @@ def pagerank(
     pruning inspects first.  The graph flavor of what
     :func:`semantic_dedup`'s per-cell argmax does locally.
 
-    Determinism (the :func:`label_propagation` discipline, floats allowed
-    under the token-entropy contract): per-edge contributions
+    The walk is :func:`personalized_pagerank`'s with every graph node a
+    seed, so the two share their numerics: per-edge contributions
     ``round(r/outdeg, 12)`` summed as exact ``decimal(38,12)``
-    (order-independent), each round's rank is one fixed-shape double
-    expression rounded at 1e-12 — so the full ``n_iters`` walk is
-    SQL-unrolled and oracle-checked.
+    (order-independent), each round's rank one fixed-shape double
+    expression rounded at 1e-12 — the full ``n_iters`` walk is SQL-unrolled
+    and oracle-checked.
 
-    Scale shape: graph builds ONCE (cell-bounded, O(N·k) edges); per round
+    Scale shape: graph builds ONCE (cell-bounded, O(N·k) edges; or pass
+    ``graph`` — ``(id_col, nbr_id)`` edge rows, e.g. a persisted knn-graph
+    layout read back from parquet — to skip the build entirely); per round
     one edge×rank join (≤ N·k rows, contributions map-side combined) plus
     one node-keyed agg; rank frame lineage-cut per round.  The node count
     is the only driver scalar.  Dangling mass (nodes with in-edges only)
-    is dropped, not redistributed — documented PageRank simplification.
-
-    Pass ``graph`` (``(id_col, nbr_id)`` edge rows — e.g. a persisted
-    knn-graph layout read back from parquet) to skip the build entirely:
-    at 100 TB the graph build dominates every consumer, so it materializes
-    ONCE per (corpus, k, cells, n_probe) and rank/label/audit queries
-    re-attach (the IVF/bucketed-layout lifecycle)."""
-    if graph is not None:
-        g = graph.select(F.col(id_col).alias("__src"), F.col("nbr_id").alias("__nbr"))
-    else:
-        g = knn_graph(
-            df, k=k, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col, n_probe=n_probe
-        ).select(F.col(id_col).alias("__src"), F.col("nbr_id").alias("__nbr"))
-        g = g.localCheckpoint(eager=False)  # one build, consumed every round
-    deg = g.groupBy("__src").agg(F.count(F.lit(1)).alias("__deg"))
-    edges = g.join(deg, "__src").localCheckpoint(eager=False)
-    nodes = (
-        g.select(F.col("__src").alias("__id"))
-        .union(g.select(F.col("__nbr").alias("__id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("knn graph is empty: no edges to rank over")
-    # teleport/damping literals come from the SAME python floats the oracle
-    # interpolates via repr() — 1-0.85 is 0.15000000000000002, not 0.15
-    tele, damp = 1.0 - damping, float(damping)
-    ranks = nodes.select(
-        "__id", F.round(F.lit(1.0) / F.lit(float(n)), 12).alias("__r")
-    )
-    for _ in range(n_iters):
-        contrib = edges.join(
-            ranks.withColumnRenamed("__id", "__src"), "__src"
-        ).select(
-            "__nbr", F.round(F.col("__r") / F.col("__deg"), 12).alias("__c")
-        )
-        s = contrib.groupBy("__nbr").agg(
-            F.sum(F.col("__c").cast("decimal(38,12)")).alias("__s")
-        )
-        ranks = (
-            nodes.join(s, nodes["__id"] == s["__nbr"], "left")
-            .select(
-                "__id",
-                F.round(
-                    F.lit(tele) / F.lit(float(n))
-                    + F.lit(damp)
-                    * F.coalesce(F.col("__s").cast("double"), F.lit(0.0)),
-                    12,
-                ).alias("__r"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select(
+    is dropped, not redistributed — documented PageRank simplification."""
+    g = _walk_edges(df, graph, k, n_centroids, id_col, vec_col, n_probe)
+    return _rank_walk(g, n_iters, damping).select(
         F.col("__id").alias(id_col), F.col("__r").alias("pagerank")
     ).orderBy(id_col)
 
@@ -1414,78 +1441,19 @@ def personalized_pagerank(
     neighborhood of the seeds — the "more like these" expansion a corpus
     curator runs from a hand-picked exemplar set (topic expansion, seed-set
     retrieval augmentation, targeted up-sampling), where global
-    :func:`pagerank` answers "central to the WHOLE corpus" instead.
+    :func:`pagerank` (this walk with every node a seed) answers "central
+    to the WHOLE corpus" instead.
 
-    Numerics follow :func:`pagerank`'s oracle-checked discipline exactly:
-    per-edge contributions ``round(r/outdeg, 12)`` summed as exact
-    ``decimal(38,12)`` (order-independent), each round one fixed-shape
-    double expression rounded at 1e-12.  The personalization vector is
-    ``1/n_seeds`` on seeds, 0 elsewhere; non-seed nodes get NO teleport
-    term, so unreachable components decay to 0 — the defining PPR
-    property.  ``n_seeds`` is the only extra driver scalar.
-
-    Scale shape: identical to pagerank — graph builds ONCE (or pass
-    ``graph=`` to re-attach a persisted layout; at 100 TB the build
-    dominates every consumer), then per round one edge×rank join (≤ N·k
-    rows) plus one node-keyed agg, rank frame lineage-cut per round."""
-    if graph is not None:
-        g = graph.select(F.col(id_col).alias("__src"), F.col("nbr_id").alias("__nbr"))
-    else:
-        g = knn_graph(
-            df, k=k, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col, n_probe=n_probe
-        ).select(F.col(id_col).alias("__src"), F.col("nbr_id").alias("__nbr"))
-        g = g.localCheckpoint(eager=False)  # one build, consumed every round
-    deg = g.groupBy("__src").agg(F.count(F.lit(1)).alias("__deg"))
-    edges = g.join(deg, "__src").localCheckpoint(eager=False)
+    The personalization vector is ``1/n_seeds`` on seeds, 0 elsewhere;
+    non-seed nodes get NO teleport term, so unreachable components decay
+    to 0 — the defining PPR property.  ``n_seeds`` is the only extra driver
+    scalar; numerics and scale shape are :func:`pagerank`'s (``graph=``
+    re-attaches a persisted layout the same way)."""
+    g = _walk_edges(df, graph, k, n_centroids, id_col, vec_col, n_probe)
     flags = df.select(
         F.col(id_col).alias("__id"), seed_pred.cast("boolean").alias("__is_seed")
     )
-    nodes = (
-        g.select(F.col("__src").alias("__id"))
-        .union(g.select(F.col("__nbr").alias("__id")))
-        .distinct()
-        .join(flags, "__id", "left")
-        .select("__id", F.coalesce("__is_seed", F.lit(False)).alias("__is_seed"))
-        .localCheckpoint(eager=True)
-    )
-    n_seeds = nodes.filter(F.col("__is_seed")).count()
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank: no graph node satisfies seed_pred")
-    # teleport/damping literals come from the SAME python floats the oracle
-    # interpolates via repr() (the pagerank discipline)
-    tele, damp = 1.0 - damping, float(damping)
-    seed_mass = F.when(
-        F.col("__is_seed"),
-        F.round(F.lit(1.0) / F.lit(float(n_seeds)), 12),
-    ).otherwise(F.lit(0.0))
-    ranks = nodes.select("__id", "__is_seed", seed_mass.alias("__r"))
-    for _ in range(n_iters):
-        contrib = edges.join(
-            ranks.select(F.col("__id").alias("__src"), "__r"), "__src"
-        ).select(
-            "__nbr", F.round(F.col("__r") / F.col("__deg"), 12).alias("__c")
-        )
-        s = contrib.groupBy("__nbr").agg(
-            F.sum(F.col("__c").cast("decimal(38,12)")).alias("__s")
-        )
-        ranks = (
-            nodes.join(s, nodes["__id"] == s["__nbr"], "left")
-            .select(
-                "__id",
-                "__is_seed",
-                F.round(
-                    F.when(
-                        F.col("__is_seed"),
-                        F.lit(tele) / F.lit(float(n_seeds)),
-                    ).otherwise(F.lit(0.0))
-                    + F.lit(damp)
-                    * F.coalesce(F.col("__s").cast("double"), F.lit(0.0)),
-                    12,
-                ).alias("__r"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select(
+    return _rank_walk(g, n_iters, damping, flags).select(
         F.col("__id").alias(id_col),
         F.col("__is_seed").alias("is_seed"),
         F.col("__r").alias("ppr"),
@@ -1509,11 +1477,7 @@ def graph_degree_profile(edges: DataFrame, id_col: str = "vec_id") -> DataFrame:
     is one self-semi-join on the (src, dst) pair — no node×node blowup;
     the histogram is ≤ max-in-degree rows."""
     src = edges.select(F.col(id_col).alias("__node"), F.col("nbr_id").alias("__nbr"))
-    nodes = (
-        src.select("__node")
-        .union(src.select(F.col("__nbr").alias("__node")))
-        .distinct()
-    )
+    nodes = _node_set(src, "__node", "__nbr", "__node")
     outd = src.groupBy("__node").agg(F.count(F.lit(1)).alias("__out"))
     ind = (
         src.groupBy(F.col("__nbr").alias("__node"))
@@ -1579,49 +1543,24 @@ def kcore_peel(
         raise ValueError(f"k must be >= 1, got {k}")
     if n_rounds < 1:
         raise ValueError(f"n_rounds must be >= 1, got {n_rounds}")
-    und = (
-        edges.select(
-            F.least(id_col, "nbr_id").alias("u"),
-            F.greatest(id_col, "nbr_id").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    alive = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    deg = None
-    for _ in range(n_rounds):
-        live = (
+    und = _undirected_edges(edges, id_col)
+
+    def live_degree(alive: DataFrame) -> DataFrame:
+        """``(node, degree)`` over the edges with both ends in ``alive``."""
+        return _undirected_degree(
             und.join(alive.select(F.col("node").alias("u")), "u", "left_semi")
             .join(alive.select(F.col("node").alias("v")), "v", "left_semi")
         )
-        deg = (
-            live.select(F.col("u").alias("node"))
-            .unionAll(live.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("degree"))
+
+    alive = _node_set(und, "u", "v", "node")
+    for _ in range(n_rounds):
+        alive = (
+            live_degree(alive).filter(F.col("degree") >= k).select("node")
+            .localCheckpoint(eager=False)
         )
-        alive = deg.filter(F.col("degree") >= k).select("node").localCheckpoint(
-            eager=False
-        )
-    # final degree inside the surviving subgraph
-    live = (
-        und.join(alive.select(F.col("node").alias("u")), "u", "left_semi")
-        .join(alive.select(F.col("node").alias("v")), "v", "left_semi")
-    )
-    final_deg = (
-        live.select(F.col("u").alias("node"))
-        .unionAll(live.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-    )
-    return alive.join(final_deg, "node", "left").select(
+    return alive.join(live_degree(alive), "node", "left").select(
         F.col("node").alias(id_col),
-        F.coalesce("core_degree", F.lit(0).cast("long")).alias("core_degree"),
+        F.coalesce("degree", F.lit(0).cast("long")).alias("core_degree"),
     )
 
 
@@ -1715,8 +1654,6 @@ def knn_recall_audit(
     scan (the :func:`ann_batch_topk` shape) — audit cost is
     |sample| × N scored pairs, tuned by ``sample_mod``.  The recall
     division is two exact counts — the report is oracle-checked."""
-    from pyspark.sql.window import Window
-
     if sample_mod < 1:
         raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
     if graph is None:
@@ -1775,8 +1712,7 @@ def knn_recall_audit(
         F.col(id_col).alias("__qid"), F.col("nbr_id").alias("__nbr")
     )
     # the same rankability contract knn_graph applies internally
-    corpus = df.filter(F.col(vec_col).isNotNull())
-    corpus = corpus.filter(F.size(vec_col) == _modal_dim(corpus, vec_col))
+    corpus, _ = _rankable(df, vec_col)
     corpus = corpus.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
@@ -1790,10 +1726,7 @@ def knn_recall_audit(
     scored = corpus.join(F.broadcast(queries), F.col("__id") != F.col("__qid")).select(
         "__qid",
         F.col("__id").alias("__nbr"),
-        F.round(
-            _dot(F.col("__v"), F.col("__qv")) / (F.col("__n") * F.col("__qn")),
-            round_digits,
-        ).alias("__cos"),
+        _cos_normed("__v", "__qv", "__n", "__qn", round_digits).alias("__cos"),
     )
     w = Window.partitionBy("__qid").orderBy(F.desc("__cos"), "__nbr")
     exact = (
@@ -1852,8 +1785,7 @@ def embedding_drift(
     modal dimension (the :func:`_modal_dim` contract); a zero-norm
     CENTROID yields NULL cosine rather than NaN."""
     split = split if split is not None else (F.col(id_col) % 2 == 0)
-    base = df.filter(F.col(vec_col).isNotNull())
-    base = base.filter(F.size(vec_col) == _modal_dim(base, vec_col))
+    base, _ = _rankable(df, vec_col)
     ex = base.select(
         F.col(label_col).alias("__lab"),
         split.alias("__in_a"),
@@ -1869,17 +1801,13 @@ def embedding_drift(
     b = cent.filter(~F.col("__in_a")).select(
         "__lab", "__pos", F.col("__c").alias("__bv"), F.col("__n").alias("__nb")
     )
-
-    def _ssum(prod: Column) -> Column:
-        return F.sum(F.round(prod, 12).cast("decimal(38,12)")).cast("double")
-
     j = a.join(b, ["__lab", "__pos"])
     s = j.groupBy("__lab").agg(
         F.max("__na").alias("n_a"),
         F.max("__nb").alias("n_b"),
-        _ssum(F.col("__av") * F.col("__bv")).alias("__dot"),
-        _ssum(F.col("__av") * F.col("__av")).alias("__aa"),
-        _ssum(F.col("__bv") * F.col("__bv")).alias("__bb"),
+        _exact_sum(F.col("__av") * F.col("__bv")).alias("__dot"),
+        _exact_sum(F.col("__av") * F.col("__av")).alias("__aa"),
+        _exact_sum(F.col("__bv") * F.col("__bv")).alias("__bb"),
     )
     den = F.sqrt(F.col("__aa")) * F.sqrt(F.col("__bb"))
     return s.select(
@@ -1974,10 +1902,7 @@ def kmeans_refine(
     the ~0.3-0.5 s 32-task stage overhead per round (the measured
     power_iteration_top rejection, same class), so the narrow shape
     stays."""
-    df = df.filter(F.col(vec_col).isNotNull())
-    if dim is None:
-        dim = _modal_dim(df, vec_col)
-    df = df.filter(F.size(F.col(vec_col)) == dim)
+    df, dim = _rankable(df, vec_col, dim)
     cents = seeded_codebook(df, id_col, vec_col, n_centroids)
     if not cents:
         raise ValueError(
@@ -2110,8 +2035,6 @@ def ann_batch_topk(
     mapper BEFORE that exchange, so the shuffle carries ≤ k rows per
     (mapper, query) — never the scored corpus.  Ties break by corpus id
     (deterministic, matching the single-query ``cosine_topk``)."""
-    from pyspark.sql.window import Window
-
     q = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qv")
@@ -2155,13 +2078,7 @@ def embedding_near_dup_pairs(
     return (
         a.join(b, "sig")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                _dot(F.col("v_a"), F.col("v_b")) / (F.col("__na") * F.col("__nb")),
-                round_digits,
-            ),
-        )
+        .withColumn("cos_sim", _cos_normed("v_a", "v_b", "__na", "__nb", round_digits))
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
@@ -2170,17 +2087,19 @@ def embedding_near_dup_pairs(
 # --- int8 embedding quantization --------------------------------------------
 
 
-def _int8_scales_row(corpus: DataFrame, vec_col: str) -> DataFrame:
-    """Single-row frame holding ``__scales`` = per-dimension ``max|x|/127``
-    over the corpus: one posexplode → dim-sized max aggregate, collapsed to
-    one sorted array (dim-sized collect inside the plan, not the driver)."""
+def _with_int8_scales(corpus: DataFrame, vec_col: str) -> DataFrame:
+    """``corpus`` plus ``__scales`` = per-dimension ``max|x|/127`` over the
+    corpus: one posexplode → dim-sized max aggregate, collapsed to one
+    sorted array (dim-sized collect inside the plan, not the driver) and
+    broadcast back onto every row."""
     ex = corpus.select(F.posexplode(vec_col).alias("__j", "__x"))
     per_dim = ex.groupBy("__j").agg(
         F.max(F.abs(F.col("__x").cast("double"))).alias("__m")
     )
-    return per_dim.agg(
+    scales = per_dim.agg(
         F.sort_array(F.collect_list(F.struct("__j", "__m"))).alias("__sm")
     ).select(F.transform("__sm", lambda s: s["__m"] / 127.0).alias("__scales"))
+    return corpus.crossJoin(F.broadcast(scales))
 
 
 def _q8_elem(x: Column, scale: Column) -> Column:
@@ -2204,6 +2123,12 @@ def _q8_elem(x: Column, scale: Column) -> Column:
         )
         .cast("int")
     )
+
+
+def _q8_vec(vec: Column) -> Column:
+    """:func:`_q8_elem` over every element of ``vec``, against the
+    per-dimension ``__scales`` column of :func:`_with_int8_scales`."""
+    return F.transform(vec, lambda x, j: _q8_elem(x, F.element_at(F.col("__scales"), j + 1)))
 
 
 def _q8_sql(elem: str, scale: str = "scales[CAST(j AS INT)]") -> str:
@@ -2244,18 +2169,12 @@ def quantize_embeddings_int8(
     combined, ``dim`` result rows), the dim-sized scales row broadcast
     back onto the corpus, and quantization itself is a row-local
     higher-order projection — the corpus never shuffles."""
-    if dim is None:
-        dim = _modal_dim(df, vec_col)
-    corpus = df.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
-    scales_row = _int8_scales_row(corpus, vec_col)
+    corpus, _ = _rankable(df, vec_col, dim)
     # quantize ONCE into a materialized column, then derive the error by
     # zipping the original vector with the computed q — Catalyst does no CSE
     # inside HOF lambdas, so inlining the clamp/round tree into the error
     # term would execute it twice per element (r9 review)
-    qexpr = F.transform(
-        F.col(vec_col),
-        lambda x, j: _q8_elem(x, F.element_at(F.col("__scales"), j + 1)),
-    )
+    qexpr = _q8_vec(F.col(vec_col))
     errs = F.transform(
         F.col(vec_col),
         lambda x, j: F.abs(
@@ -2265,7 +2184,7 @@ def quantize_embeddings_int8(
         ),
     )
     return (
-        corpus.crossJoin(F.broadcast(scales_row))
+        _with_int8_scales(corpus, vec_col)
         .withColumn("qvec", qexpr)
         .select(
             F.col(id_col),
@@ -2333,31 +2252,23 @@ def ann_int8_topk(
     single narrow projection + TakeOrdered top-k (per-partition k-row
     heaps) — the corpus never shuffles.  |dot| ≤ dim·127² (~10⁶ at
     dim 64), far inside int64."""
-    if dim is None:
-        dim = _modal_dim(df, vec_col)
+    corpus, dim = _rankable(df, vec_col, dim)
     if len(query_vec) != dim:
         raise ValueError(
             f"query_vec has {len(query_vec)} dims but the corpus dimension is {dim}"
         )
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    corpus = df.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
-    scales_row = _int8_scales_row(corpus, vec_col)
     qlit = F.array(*[F.lit(float(v)).cast("double") for v in query_vec])
-    with_scales = corpus.crossJoin(F.broadcast(scales_row))
-    q_corpus = F.transform(
-        F.col(vec_col), lambda x, j: _q8_elem(x, F.element_at(F.col("__scales"), j + 1))
-    )
-    q_query = F.transform(
-        qlit, lambda x, j: _q8_elem(x, F.element_at(F.col("__scales"), j + 1))
-    )
     dot = F.aggregate(
-        F.zip_with(q_corpus, q_query, lambda a, b: a.cast("long") * b.cast("long")),
+        F.zip_with(
+            _q8_vec(F.col(vec_col)), _q8_vec(qlit), lambda a, b: a.cast("long") * b.cast("long")
+        ),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
     return (
-        with_scales.select(F.col(id_col), dot.alias("dot_int8"))
+        _with_int8_scales(corpus, vec_col).select(F.col(id_col), dot.alias("dot_int8"))
         .orderBy(F.desc("dot_int8"), F.asc(id_col))
         .limit(k)
     )
@@ -2444,9 +2355,7 @@ def power_iteration_top(
     corpus² anywhere; rounds are lineage-cut."""
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    base = df.filter(F.col(vec_col).isNotNull())
-    dim = _modal_dim(base, vec_col)
-    base = base.filter(F.size(vec_col) == dim)
+    base, dim = _rankable(df, vec_col)
     ex = base.select(
         F.col(id_col).alias("__id"),
         F.posexplode(vec_col).alias("__pos", "__x"),
@@ -2463,35 +2372,32 @@ def power_iteration_top(
         .select("__id", "__pos", (F.col("__x") - F.col("__m")).alias("__xc"))
         .localCheckpoint(eager=False)  # consumed every round + both variances
     )
-
-    def _dsum(prod: Column) -> Column:
-        return F.sum(F.round(prod, 12).cast("decimal(38,12)")).cast("double")
-
     v0 = 1.0 / math.sqrt(float(dim))
-    # round 1's iterate is the CONSTANT 1/sqrt(dim): multiply by the literal
-    # instead of broadcast-joining a frame whose value column is that same
-    # literal everywhere — one less broadcast build + join, products
-    # bit-identical (r11 optimization round, guide §2.4)
-    v: DataFrame | None = None
-    d = None
-    for _ in range(n_iters):
+
+    def project(v: DataFrame | None) -> DataFrame:
+        """Per-id ``d = xc·v``.  Round 1's iterate is the CONSTANT
+        1/sqrt(dim): multiply by the literal instead of broadcast-joining a
+        frame whose value column is that same literal everywhere — one less
+        broadcast build + join, products bit-identical (r11 optimization
+        round, guide §2.4)."""
         if v is None:
-            d = xc.groupBy("__id").agg(
-                _dsum(F.col("__xc") * F.lit(v0)).alias("__d")
-            )
-        else:
-            d = (
-                xc.join(F.broadcast(v), "__pos")
-                .groupBy("__id")
-                .agg(_dsum(F.col("__xc") * F.col("__val")).alias("__d"))
-            )
+            return xc.groupBy("__id").agg(_exact_sum(F.col("__xc") * F.lit(v0)).alias("__d"))
+        return (
+            xc.join(F.broadcast(v), "__pos")
+            .groupBy("__id")
+            .agg(_exact_sum(F.col("__xc") * F.col("__val")).alias("__d"))
+        )
+
+    v: DataFrame | None = None
+    for _ in range(n_iters):
+        d = project(v)
         w = (
             xc.join(d, "__id")
             .groupBy("__pos")
-            .agg(_dsum(F.col("__d") * F.col("__xc")).alias("__w"))
+            .agg(_exact_sum(F.col("__d") * F.col("__xc")).alias("__w"))
         )
         nrm = w.agg(
-            F.sqrt(_dsum(F.col("__w") * F.col("__w"))).alias("__nrm")
+            F.sqrt(_exact_sum(F.col("__w") * F.col("__w"))).alias("__nrm")
         )
         v = (
             w.crossJoin(F.broadcast(nrm))
@@ -2512,21 +2418,17 @@ def power_iteration_top(
     # sums into one narrow stage — alternating idle A/B, min of 3:
     # 2.67 s -> 3.03 s.  At cluster scale (wide frames, busy cores) the
     # one-pass shape is the win; re-evaluate there.
-    d = (
-        xc.join(F.broadcast(v), "__pos")
-        .groupBy("__id")
-        .agg(_dsum(F.col("__xc") * F.col("__val")).alias("__d"))
-    )
+    d = project(v)
     top = d.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(_dsum(F.col("__d") * F.col("__d")) / F.count(F.lit(1)), 6).alias(
+        F.round(_exact_sum(F.col("__d") * F.col("__d")) / F.count(F.lit(1)), 6).alias(
             "var_top"
         ),
     )
     tot = xc.groupBy("__id").agg(
-        _dsum(F.col("__xc") * F.col("__xc")).alias("__sq")
+        _exact_sum(F.col("__xc") * F.col("__xc")).alias("__sq")
     ).agg(
-        F.round(_dsum_identity(F.col("__sq")) / F.count(F.lit(1)), 6).alias(
+        F.round(_exact_sum(F.col("__sq")) / F.count(F.lit(1)), 6).alias(
             "var_total"
         )
     )
@@ -2543,12 +2445,6 @@ def power_iteration_top(
             ).alias("top_share"),
         )
     )
-
-
-def _dsum_identity(col: Column) -> Column:
-    """Exact-decimal sum of already-rounded doubles (no extra per-term
-    product): the second-level fold of a two-level variance sum."""
-    return F.sum(F.round(col, 12).cast("decimal(38,12)")).cast("double")
 
 
 def neighbor_jaccard(

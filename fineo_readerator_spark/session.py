@@ -91,6 +91,14 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def is_local_master(master: str) -> bool:
+    """True for the in-process masters ``get_spark`` sets (``local``,
+    ``local[N]``, ``local[*]``): every task shares one JVM, so a repartition
+    or a broadcast costs no network.  ``local-cluster[...]`` runs separate
+    executor JVMs and gets the cluster shape, like a real cluster."""
+    return master == "local" or master.startswith("local[")
+
+
 def codegen_compiles(spark: SparkSession) -> int:
     """Generated classes compiled so far in this JVM: a count that moves
     only when a plan's generated code missed the compiled-class cache."""

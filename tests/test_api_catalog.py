@@ -62,7 +62,11 @@ def test_read_only_guard(tenant):
     assert_read_only("SELECT 1")
     assert_read_only("WITH t AS (SELECT 1) SELECT * FROM t")
     assert_read_only("-- comment\nVALUES (1)")
+    # a leading parenthesis or no space before the next token is still a read
+    for good in ["(SELECT 1)", "( SELECT 1)", "SELECT(1)", "select*from events", "(VALUES (1))"]:
+        assert_read_only(good)
     assert tenant.sql("VALUES (1)").collect()[0][0] == 1
+    assert tenant.sql("(SELECT 1)").collect()[0][0] == 1
 
 
 def test_errors_forced_apikey_filter(tenant):

@@ -2708,6 +2708,40 @@ def test_personalized_pagerank_empty_seed_raises(spark):
         personalized_pagerank(df, df.vec_id > 100, graph=edges)
 
 
+def test_pagerank_empty_graph_raises(spark):
+    from fineo_readerator_spark.llm_ops.similarity import pagerank
+
+    edges = spark.createDataFrame([], "vec_id long, nbr_id long")
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="knn graph is empty"):
+        pagerank(df, graph=edges)
+
+
+def test_pagerank_is_the_all_seeds_personalized_walk(spark):
+    """Global PageRank equals personalized PageRank with every node a seed,
+    row for row, and with ``graph=`` it never reads the corpus frame (no
+    seed-flag join): an embedding column that raises when evaluated is
+    never touched."""
+    from fineo_readerator_spark.llm_ops.similarity import (
+        pagerank,
+        personalized_pagerank,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 3), (5, 3)], "vec_id long, nbr_id long"
+    )
+    df = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(1, 6)], "vec_id long, embedding array<double>"
+    )
+    ppr = personalized_pagerank(df, F.lit(True), n_iters=3, graph=edges).collect()
+    unreadable = df.select("vec_id", F.raise_error(F.lit("corpus read")).alias("embedding"))
+    pr = pagerank(unreadable, n_iters=3, graph=edges).collect()
+    assert len(pr) == 5 and all(r.is_seed for r in ppr)
+    assert [(r.vec_id, r.pagerank) for r in pr] == [(r.vec_id, r.ppr) for r in ppr]
+
+
 def test_graph_degree_profile_hand_counts(spark):
     """Tiny hand-checkable graph: 1->2, 2->1, 1->3.  All three nodes have
     in-degree 1; of the 3 directed edges, the (1,2)/(2,1) pair is

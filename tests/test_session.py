@@ -1,6 +1,8 @@
 from __future__ import annotations
 
-from fineo_readerator_spark.session import codegen_compiles
+import pytest
+
+from fineo_readerator_spark.session import codegen_compiles, is_local_master
 
 
 def test_codegen_cache_holds_a_working_set_above_spark_default(spark):
@@ -18,3 +20,20 @@ def test_codegen_cache_holds_a_working_set_above_spark_default(spark):
     before = codegen_compiles(spark)
     run(1)
     assert codegen_compiles(spark) == before
+
+
+@pytest.mark.parametrize(
+    "master, local",
+    [
+        ("local", True),
+        ("local[4]", True),
+        ("local[*]", True),
+        ("local-cluster[2,1,1024]", False),
+        ("spark://h:7077", False),
+        ("yarn", False),
+    ],
+)
+def test_is_local_master(master, local):
+    """Only in-process masters get the local shapes; ``local-cluster`` has
+    separate executor JVMs and is treated like a cluster."""
+    assert is_local_master(master) is local

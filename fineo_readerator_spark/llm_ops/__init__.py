@@ -21,7 +21,6 @@ from fineo_readerator_spark.llm_ops.dedup import (
     ngram_jaccard_pairs,
     simhash_dedup,
     simhash_halves,
-    simhash_signatures,
 )
 from fineo_readerator_spark.llm_ops.multimodal import (
     attach_media_metadata,
@@ -48,7 +47,6 @@ __all__ = [
     "minhash_dedup",
     "simhash_dedup",
     "simhash_halves",
-    "simhash_signatures",
     "ngram_jaccard_pairs",
     "cosine_topk",
     "semantic_dedup",

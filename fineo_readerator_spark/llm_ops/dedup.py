@@ -329,20 +329,21 @@ def shingles(col: Column, k: int = 3) -> Column:
 
 
 def _md5_long(col: Column) -> Column:
-    """Portable 60-bit hash: first 15 hex chars of md5 as a long.  Identical
-    in Spark, DuckDB and Python — the leaf that lets the whole MinHash/SimHash
-    pipeline be replayed bit-for-bit by the SQL oracle.  Slower than xxhash64
-    (md5 + hex parse vs one native hash), so production paths default to
-    xxhash64 and only the oracle-checked queries pay for portability."""
+    """The leaf hash of every shingle in this module: the first 15 hex
+    chars of md5 as a 60-bit long.  Identical in Spark, DuckDB and Python,
+    so every signature, band and cluster can be replayed bit-for-bit by the
+    SQL oracles — there is one hash family, with no faster engine-only
+    variant to drift from them."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def shingle_hashes(col: Column, shingle_k: int = 3, portable: bool = False) -> Column:
+def shingle_hashes(col: Column, shingle_k: int = 3) -> Column:
     """Distinct shingle hash array (the expensive tokenize+hash pass —
     materialize this ONCE and feed it to ``minhash_signature_from``, otherwise
     each of the N permutations re-evaluates the tokenization)."""
-    leaf = _md5_long if portable else F.xxhash64
-    return F.transform(shingles(col, shingle_k), lambda s: F.pmod(leaf(s), F.lit(_MERSENNE_P)))
+    return F.transform(
+        shingles(col, shingle_k), lambda s: F.pmod(_md5_long(s), F.lit(_MERSENNE_P))
+    )
 
 
 def minhash_signature_from(base: Column, num_hashes: int = 64, seed: int = 42) -> Column:
@@ -387,7 +388,6 @@ def minhash_signatures(
     num_hashes: int = 64,
     shingle_k: int = 3,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """(id, sig) signatures via explode + N ``min`` aggregates.
 
@@ -403,14 +403,13 @@ def minhash_signatures(
     # inside transform() evaluates interpreted (higher-order lambdas skip
     # whole-stage codegen), while the post-explode projection is codegen'd —
     # measured ~25% faster at equal output (same strings, same leaf hash)
-    leaf = _md5_long if portable else F.xxhash64
     exploded = (
         _spread(df.select(id_col, text_col))
         .select(
             F.col(id_col).alias("id"),
             F.explode(shingles(F.col(text_col), shingle_k)).alias("s"),
         )
-        .select("id", F.pmod(leaf(F.col("s")), F.lit(_MERSENNE_P)).alias("h"))
+        .select("id", F.pmod(_md5_long(F.col("s")), F.lit(_MERSENNE_P)).alias("h"))
     )
     # one SQL-string expression instead of N composed Column objects: the
     # Column algebra costs ~8 py4j round-trips per permutation (seconds of
@@ -453,7 +452,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 3,
     threshold: float = 0.7,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b, est_jaccard ≥ threshold).
 
@@ -473,7 +471,7 @@ def minhash_lsh_pairs(
     # +11.8%, d_incremental_dedup +5.7%, d_edit_verify +4.1%.  The
     # checkpoint is the cheaper lineage handling on both faces.
     sigs = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_k, seed, portable
+        df, id_col, text_col, num_hashes, shingle_k, seed
     ).localCheckpoint(eager=False)
     # band join carries only (band_hash, id): the 64-long signatures never
     # enter the wide shuffle — they rejoin onto the (tiny) candidate edge set
@@ -509,7 +507,6 @@ def minhash_audit(
     shingle_k: int = 3,
     threshold: float = 0.7,
     seed: int = 42,
-    portable: bool = False,
     sample_mod: int = 5,
     max_sample_docs: int = 10_000,
 ) -> DataFrame:
@@ -537,7 +534,7 @@ def minhash_audit(
     thr_ppm = int(round(threshold * 1_000_000))
     sets = df.select(
         F.col(id_col).alias("id"),
-        shingle_hashes(F.col(text_col), shingle_k, portable).alias("hs"),
+        shingle_hashes(F.col(text_col), shingle_k).alias("hs"),
     ).localCheckpoint(eager=False)
     n_samp = sets.filter(F.col("id") % sample_mod == 0).count()
     if n_samp > max_sample_docs:
@@ -548,7 +545,7 @@ def minhash_audit(
         )
     cand = (
         minhash_lsh_pairs(
-            df, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed, portable
+            df, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed
         )
         .select("id_a", "id_b")
         .localCheckpoint(eager=False)
@@ -736,7 +733,6 @@ def _minhash_rep_labels(
     shingle_k: int,
     threshold: float,
     seed: int,
-    portable: bool,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared MinHash clustering cascade: exact-dedup reps (checkpointed) and
     their (id, label) cluster assignment from LSH candidate edges + min-label
@@ -745,7 +741,7 @@ def _minhash_rep_labels(
     (gates, checkpoints, banding) lands here once."""
     reps = exact_dedup(df, id_col, text_col).localCheckpoint(eager=False)
     pairs = minhash_lsh_pairs(
-        reps, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed, portable
+        reps, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed
     )
     ids = reps.select(F.col(id_col).alias("id"))
     return reps, _components_min_label(ids, pairs)
@@ -760,7 +756,6 @@ def minhash_dedup(
     shingle_k: int = 3,
     threshold: float = 0.7,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """Fuzzy dedup: keep one representative (min id) per near-duplicate
     cluster; clusters come from LSH candidate edges + label propagation.
@@ -772,7 +767,7 @@ def minhash_dedup(
     only the group min could ever be the cluster min.  On real corpora
     (20-50 % exact-dup rate at crawl scale) this halves the dominant cost."""
     _, labels = _minhash_rep_labels(
-        df, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed, portable
+        df, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed
     )
     keep = labels.filter(F.col("id") == F.col("label")).select(F.col("id").alias(id_col))
     return df.join(keep, on=id_col, how="left_semi")
@@ -788,7 +783,6 @@ def minhash_dedup_keep_best(
     shingle_k: int = 3,
     threshold: float = 0.7,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """Fuzzy dedup keeping the BEST member per near-duplicate cluster —
     highest ``score_col`` (ties: lowest id) — instead of the arbitrary
@@ -811,7 +805,7 @@ def minhash_dedup_keep_best(
     from pyspark.sql.window import Window
 
     reps, labels = _minhash_rep_labels(
-        df, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed, portable
+        df, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed
     )
     scored = labels.join(
         reps.select(F.col(id_col).alias("id"), F.col(score_col).alias("__score")), "id"
@@ -828,87 +822,18 @@ def minhash_dedup_keep_best(
 # --- SimHash --------------------------------------------------------------
 
 
-def simhash64(col: Column) -> Column:
-    """64-bit SimHash from whitespace tokens, pure Catalyst and single-pass:
-    one ``aggregate`` over the token-hash array keeps 64 bit-votes in the
-    accumulator (per bit: +1/-1 by the token hash's bit), then the votes fold
-    into a long.  Each token is hashed exactly once; no shuffle."""
-    th = F.transform(tokens(col), lambda t: F.xxhash64(t))
-    votes = F.aggregate(
-        th,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.transform(
-            acc,
-            lambda v, i: v
-            + F.when(
-                F.call_function("shiftright", h, i.cast("int")).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1),
-        ),
-    )
-    bits = F.transform(
-        votes,
-        # shiftleft with a column index so bit 63 wraps into the sign bit
-        lambda v, i: F.when(
-            v > 0, F.call_function("shiftleft", F.lit(1).cast("long"), i.cast("int"))
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, b: acc.bitwiseOR(b))
-
-
-def simhash_signatures(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """(id, sh) 64-bit SimHashes via explode + 64 ``sum`` vote aggregates —
-    the codegen'd shape (same rationale as ``minhash_signatures``).  Docs with
-    no tokens get sh=0, matching the fold-from-empty of ``simhash64``."""
-    th = _spread(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("t")
-    ).select("id", F.xxhash64("t").alias("h"))
-    # SQL-string aggregate list (see minhash_signatures for the py4j rationale)
-    votes_arr = (
-        "array("
-        + ",".join(
-            f"sum(CASE WHEN (shiftright(h, {i}) & 1) = 1 THEN 1 ELSE -1 END)" for i in range(64)
-        )
-        + ")"
-    )
-    votes = th.groupBy("id").agg(F.expr(votes_arr).alias("v"))
-    # fold bit-votes into one long; shiftleft(1L, 63) wraps into the sign bit,
-    # matching the -(1<<63) literal of the row-local simhash64 fold
-    hashed = votes.select(
-        "id",
-        F.expr(
-            "aggregate(sequence(0, 63), 0L,"
-            " (acc, i) -> acc | IF(element_at(v, i + 1) > 0, shiftleft(1L, i), 0L))"
-        ).alias("sh"),
-    )
-    # explode drops token-less docs; restore them with the empty-fold value 0
-    return (
-        df.select(F.col(id_col).alias("id"))
-        .join(hashed, "id", "left")
-        .select("id", F.coalesce(F.col("sh"), F.lit(0).cast("long")).alias("sh"))
-    )
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_halves(
-    df: DataFrame, id_col: str, text_col: str = "text", portable: bool = False
-) -> DataFrame:
-    """(id, lo, hi) SimHash as two unsigned 32-bit halves carried in longs.
+def simhash_halves(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
+    """(id, lo, hi) 64-bit SimHash as two unsigned 32-bit halves carried in
+    longs, voted from md5-derived 32-bit token hashes via explode + 64
+    ``sum`` vote aggregates (the codegen'd shape, same rationale as
+    ``minhash_signatures``).  Docs with no tokens get lo = hi = 0.
 
     The split shape avoids signed-64 wraparound entirely, which keeps the
-    arithmetic identical across Spark, DuckDB (oracle) and Python (tests).
-    ``portable=False`` derives the halves from the xxhash64-based
-    ``simhash_signatures``; ``portable=True`` recomputes the votes from
-    md5-derived 32-bit token hashes (the oracle-replayable leaf)."""
-    if not portable:
-        sh = simhash_signatures(df, id_col, text_col)
-        return sh.select(
-            "id",
-            F.col("sh").bitwiseAND(F.lit(0xFFFFFFFF)).alias("lo"),
-            F.shiftrightunsigned(F.col("sh"), 32).alias("hi"),
-        )
+    arithmetic identical across Spark, DuckDB (oracle) and Python (tests)."""
     th = _spread(df.select(id_col, text_col)).select(
         F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("t")
     ).select(
@@ -947,14 +872,13 @@ def simhash_dedup(
     text_col: str = "text",
     max_hamming: int = 3,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """SimHash near-dup: bucket by 16-bit chunks (pigeonhole: any pair within
     hamming ≤ 3 shares at least one of 4 chunks), verify hamming in-bucket,
     cluster, keep min id.  Exact-dup cascade first (see minhash_dedup)."""
     full = df
     df = exact_dedup(df, id_col, text_col).localCheckpoint(eager=False)
-    sh = simhash_halves(df, id_col, text_col, portable).localCheckpoint(
+    sh = simhash_halves(df, id_col, text_col).localCheckpoint(
         eager=False
     )  # hash pass runs once, not once per self-join side (dropping this
     # cut for AQE exchange reuse measured as a wash at best — the minhash
@@ -1053,7 +977,6 @@ def containment_pairs(
     shingle_k: int = 3,
     threshold: float = 0.8,
     max_df: int = 20,
-    portable: bool = False,
     min_kept: int = 3,
 ) -> DataFrame:
     """ASYMMETRIC shingle containment: directed pairs where
@@ -1089,9 +1012,7 @@ def containment_pairs(
         raise ValueError(f"min_kept must be >= 1, got {min_kept}")
     sh = df.select(
         F.col(id_col).alias("__id"),
-        F.explode(shingle_hashes(F.col(text_col), shingle_k, portable=portable)).alias(
-            "__h"
-        ),
+        F.explode(shingle_hashes(F.col(text_col), shingle_k)).alias("__h"),
     )
     rare = (
         sh.groupBy("__h")
@@ -1225,7 +1146,6 @@ _STORE_PARAM_DEFAULTS = {
     "bands": 16,
     "shingle_k": 3,
     "seed": 42,
-    "portable": False,
 }
 
 
@@ -1238,7 +1158,6 @@ def write_signature_store(
     bands: int = 16,
     shingle_k: int = 3,
     seed: int = 42,
-    portable: bool = False,
 ) -> None:
     """Persist the corpus's MinHash state so future batches dedupe against
     it WITHOUT rescanning the corpus — the daily-ingest shape at 100 TB:
@@ -1266,7 +1185,7 @@ def write_signature_store(
     # but probe with the wrong hash family (silent false negatives).  With
     # the meta gone, an interrupted rebuild reads as incomplete instead.
     _fs_delete(df.sparkSession, f"{path}/_store_meta.json")
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k, seed, portable)
+    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k, seed)
     sigs.write.mode("overwrite").parquet(f"{path}/sigs")
     # band-explode from the WRITTEN sigs: the signature aggregation runs
     # once, not once per output table (explicit schema: an EMPTY corpus
@@ -1284,7 +1203,6 @@ def write_signature_store(
                 "bands": bands,
                 "shingle_k": shingle_k,
                 "seed": seed,
-                "portable": portable,
             }
         ),
     )
@@ -1370,6 +1288,14 @@ def read_store_meta(spark, store_path: str) -> dict:
         raise ValueError(
             f"signature store meta at {store_path!r} is missing {sorted(missing)} "
             "— rebuild it with write_signature_store"
+        )
+    if meta.get("portable") is False:
+        # an older build signed with Spark's native shingle hash, which this
+        # module no longer computes: an md5-leaf probe would miss every dup
+        raise ValueError(
+            f"signature store at {store_path!r} was signed with the retired "
+            'non-md5 shingle hash ("portable": false) — rebuild it with '
+            "write_signature_store"
         )
     return dict(meta)
 
@@ -1482,7 +1408,6 @@ def admit_batch_to_store(
         meta["num_hashes"],
         meta["shingle_k"],
         meta["seed"],
-        meta["portable"],
     ).localCheckpoint(eager=False)
     verified = probe_signature_store(sigs, store_path, threshold)
     hits = verified.groupBy("id").agg(
@@ -1534,7 +1459,6 @@ def incremental_minhash_flags(
         meta["num_hashes"],
         meta["shingle_k"],
         meta["seed"],
-        meta["portable"],
     ).localCheckpoint(eager=False)
     verified = probe_signature_store(d_sigs, store_path, threshold)
     hits = verified.groupBy("id").agg(
@@ -1562,7 +1486,6 @@ def minhash_cluster_labels(
     shingle_k: int = 3,
     threshold: float = 0.7,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """The full near-duplicate CLUSTER MAP: every input row labeled with its
     cluster id (the min member id) — what provenance tracking, dup-rate
@@ -1594,8 +1517,7 @@ def minhash_cluster_labels(
     # identical row set to exact_dedup(df): lowest-id row per exact text hash
     reps = mapped_full.filter(F.col("__rn") == 1).drop("__rn", "__rep")
     pairs = minhash_lsh_pairs(
-        reps, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed,
-        portable,
+        reps, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed
     )
     labels = _components_min_label(reps.select(F.col(id_col).alias("id")), pairs)
     mapped = mapped_full.select(F.col(id_col), F.col("__rep"))
@@ -1615,7 +1537,7 @@ def minhash_cluster_labels_oracle(
     seed: int = 42,
     shingle_k: int = 3,
 ) -> str:
-    """Oracle for ``minhash_cluster_labels(portable=True)`` over
+    """Oracle for ``minhash_cluster_labels`` over
     ``corpus_sql`` (must yield doc_id, text, n_chars)."""
     from fineo_readerator_spark.llm_ops.dedup_oracles import (
         _COMPONENT_CTES,
@@ -1734,7 +1656,6 @@ def cluster_source_purity(
     shingle_k: int = 3,
     threshold: float = 0.7,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """Provenance purity of every multi-member near-dup cluster — the
     crawl-forensics question :func:`minhash_cluster_labels` feeds: a
@@ -1749,8 +1670,7 @@ def cluster_source_purity(
     to the (id, group) projection and two cluster-keyed aggregates —
     cluster-cardinality rows, never corpus²."""
     labels = minhash_cluster_labels(
-        df, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed,
-        portable,
+        df, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed
     )
     per_src = (
         labels.join(df.select(F.col(id_col), F.col(group_col).alias("__g")), id_col)
@@ -1785,7 +1705,6 @@ def dup_inflation(
     shingle_k: int = 3,
     threshold: float = 0.7,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """One-row dedup-savings estimate off the cluster map — the number a
     curator reads BEFORE running the destructive dedup: how much of the
@@ -1803,8 +1722,7 @@ def dup_inflation(
     :func:`minhash_cluster_labels` map + cluster-cardinality aggregates
     (the cluster_source_purity shape)."""
     labels = minhash_cluster_labels(
-        df, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed,
-        portable,
+        df, id_col, text_col, num_hashes, bands, shingle_k, threshold, seed
     )
     w = (
         F.coalesce(F.col(weight_col).cast("long"), F.lit(0).cast("long"))

@@ -1,4 +1,4 @@
-"""DuckDB oracle SQL for the portable MinHash-LSH and SimHash dedup paths.
+"""DuckDB oracle SQL for the MinHash-LSH and SimHash dedup paths.
 
 The Spark pipelines (llm_ops.dedup) and these generators share the leaf hash
 (first-15/8 hex chars of md5 parsed as integers), the permutation constants
@@ -34,7 +34,7 @@ def _hexparse(expr: str, start: int, n: int) -> str:
 
 def _shingle_ctes(corpus_cte: str, shingle_k: int = 3) -> str:
     """toks → distinct word-k-shingles → portable shingle hashes, mirroring
-    ``dedup.shingles`` / ``dedup.shingle_hashes(portable=True)``."""
+    ``dedup.shingles`` / ``dedup.shingle_hashes``."""
     off = shingle_k - 1
     return f"""
 __t AS (
@@ -132,7 +132,7 @@ def minhash_pairs_oracle(
     seed: int = 42,
     shingle_k: int = 3,
 ) -> str:
-    """Oracle for ``minhash_lsh_pairs(portable=True)`` over ``corpus_sql``
+    """Oracle for ``minhash_lsh_pairs`` over ``corpus_sql``
     (must yield doc_id, text, n_chars)."""
     return f"""WITH __all AS ({corpus_sql}),
 {_minhash_pairs_ctes(num_hashes, bands, threshold, seed, '__all', shingle_k)}
@@ -148,7 +148,7 @@ def minhash_audit_oracle(
     shingle_k: int = 3,
     sample_mod: int = 5,
 ) -> str:
-    """Oracle for ``dedup.minhash_audit(portable=True)`` — replays the full
+    """Oracle for ``dedup.minhash_audit`` — replays the full
     LSH cascade for the candidate set, then the exact-Jaccard re-score and
     the sampled recall leg with the same integer cross-multiplied threshold
     and half-up ppm arithmetic."""
@@ -194,7 +194,7 @@ def minhash_dedup_oracle(
     seed: int = 42,
     shingle_k: int = 3,
 ) -> str:
-    """Oracle for ``minhash_dedup(portable=True).select(doc_id, n_chars)``."""
+    """Oracle for ``minhash_dedup(...).select(doc_id, n_chars)``."""
     return f"""WITH RECURSIVE {_reps_cte(corpus_sql)},
 {_minhash_pairs_ctes(num_hashes, bands, threshold, seed, '__reps', shingle_k)},
 {_COMPONENT_CTES}
@@ -210,7 +210,7 @@ def minhash_dedup_keep_best_oracle(
     seed: int = 42,
     shingle_k: int = 3,
 ) -> str:
-    """Oracle for ``minhash_dedup_keep_best(portable=True).select(doc_id,
+    """Oracle for ``minhash_dedup_keep_best(...).select(doc_id,
     n_chars)``: same reps/candidates/components as the min-id oracle, but the
     per-cluster keep rule is argmax(``score_expr`` over __reps columns, ties
     to the lowest id)."""
@@ -230,7 +230,7 @@ SELECT r.doc_id, r.n_chars FROM __reps r JOIN __best b ON r.doc_id = b.id"""
 
 def _simhash_half_expr(hash_list: str) -> str:
     """Fold 32 bit-votes over ``hash_list`` (list of 32-bit ints) into an
-    unsigned half, mirroring ``dedup.simhash_halves(portable=True)``.
+    unsigned half, mirroring ``dedup.simhash_halves``.
     Empty token lists: inner list_sum is NULL, NULL > 0 is false, half = 0 —
     the same zero signature Spark restores via the left join."""
     return (
@@ -242,7 +242,7 @@ def _simhash_half_expr(hash_list: str) -> str:
 
 
 def simhash_dedup_oracle(corpus_sql: str, max_hamming: int = 3) -> str:
-    """Oracle for ``simhash_dedup(portable=True).select(doc_id, n_chars)``."""
+    """Oracle for ``simhash_dedup(...).select(doc_id, n_chars)``."""
     return f"""WITH RECURSIVE {_reps_cte(corpus_sql)},
 __t AS (
   SELECT doc_id,
@@ -338,7 +338,7 @@ def incremental_flags_oracle(
     seed: int = 42,
     shingle_k: int = 3,
 ) -> str:
-    """Oracle for ``incremental_minhash_flags(portable=True)``: the delta is
+    """Oracle for ``incremental_minhash_flags``: the delta is
     ``corpus_sql`` rows matching ``delta_pred``, the stored base is the rest.
     Signatures depend only on the text, so recomputing them over the full
     corpus here equals the Spark side's store + fresh-delta split."""
@@ -403,7 +403,7 @@ def cluster_purity_oracle(
     seed: int = 42,
     shingle_k: int = 3,
 ) -> str:
-    """Oracle for ``cluster_source_purity(portable=True)`` — the full
+    """Oracle for ``cluster_source_purity`` — the full
     cluster-map replay joined back to the corpus's group column
     (``corpus_sql`` must yield doc_id, text, n_chars, source)."""
     from fineo_readerator_spark.llm_ops.dedup import minhash_cluster_labels_oracle
@@ -436,7 +436,7 @@ def dup_inflation_oracle(
     seed: int = 42,
     shingle_k: int = 3,
 ) -> str:
-    """Oracle for ``dup_inflation(portable=True)`` — the cluster-map
+    """Oracle for ``dup_inflation`` — the cluster-map
     replay aggregated to the one-row savings report (``weight_expr``
     evaluates over the corpus columns)."""
     from fineo_readerator_spark.llm_ops.dedup import minhash_cluster_labels_oracle

@@ -219,10 +219,8 @@ def media_near_dup(
             ),
         ).alias("__chunk_text"),
     )
-    kept = simhash_dedup(
-        chunked, id_col, "__chunk_text", max_hamming=max_hamming, portable=True
-    ).select(id_col)
-    return df.join(kept, id_col, "left_semi")
+    kept = simhash_dedup(chunked, id_col, "__chunk_text", max_hamming=max_hamming)
+    return df.join(kept.select(id_col), id_col, "left_semi")
 
 
 def byte_entropy(

@@ -680,7 +680,6 @@ def leakage_safe_split(
     shingle_k: int = 3,
     threshold: float = 0.7,
     minhash_seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """Train/val/test split keyed on the near-duplicate CLUSTER id, not the
     row id: every member of a MinHash dup cluster (exact twins included)
@@ -705,8 +704,7 @@ def leakage_safe_split(
     if len(fractions) != 3 or abs(sum(fractions) - 1.0) > 1e-9:
         raise ValueError(f"fractions must be 3 values summing to 1, got {fractions}")
     labels = minhash_cluster_labels(
-        df, id_col, text_col, num_hashes, bands, shingle_k, threshold,
-        minhash_seed, portable,
+        df, id_col, text_col, num_hashes, bands, shingle_k, threshold, minhash_seed
     )
     return train_val_test_split(df.join(labels, id_col), "cluster_id", fractions, seed)
 

@@ -1877,7 +1877,6 @@ def ngram_novelty(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_k: int = 3,
-    portable: bool = False,
     ref_pred: Column | None = None,
 ) -> DataFrame:
     """Per-document n-gram NOVELTY against a reference corpus: the
@@ -1890,10 +1889,10 @@ def ngram_novelty(
     pairwise containment.
 
     Shares the exact shingle/hash pass with the dedup cascade
-    (``dedup.shingle_hashes`` — same tokenization, same portable md5
-    leaf), so "seen" means precisely what minhash/containment mean by
-    it.  Documents with no tokens are ABSENT (no denominator);
-    reference members score 0 by construction.
+    (``dedup.shingle_hashes`` — same tokenization, same md5 leaf), so
+    "seen" means precisely what minhash/containment mean by it.
+    Documents with no tokens are ABSENT (no denominator); reference
+    members score 0 by construction.
 
     Scale shape: one shingle pass per side; the membership check is ONE
     hash-keyed left-anti join (reference grams deduplicated first) —
@@ -1923,9 +1922,7 @@ def ngram_novelty(
         _spread(df.filter(live).select(id_col, text_col))
         .select(
             F.col(id_col).alias("__id"),
-            F.explode(
-                shingle_hashes(F.col(text_col), shingle_k, portable)
-            ).alias("__h"),
+            F.explode(shingle_hashes(F.col(text_col), shingle_k)).alias("__h"),
         )
         .localCheckpoint(eager=False)
     )
@@ -1937,9 +1934,7 @@ def ngram_novelty(
                 ref.filter(F.length(F.trim(F.col(text_col))) > 0).select(text_col)
             )
             .select(
-                F.explode(
-                    shingle_hashes(F.col(text_col), shingle_k, portable)
-                ).alias("__h")
+                F.explode(shingle_hashes(F.col(text_col), shingle_k)).alias("__h")
             )
             .distinct()
         )
@@ -1983,7 +1978,7 @@ def ngram_novelty_oracle_sql(
     id_col: str = "doc_id",
     shingle_k: int = 3,
 ) -> str:
-    """DuckDB replay of :func:`ngram_novelty(portable=True)` for the
+    """DuckDB replay of :func:`ngram_novelty` for the
     registry case where the reference is a PREDICATE-selected subset of
     the same corpus (``ref_pred`` over the corpus columns) — the shingle
     CTEs instantiate once and the reference grams derive from the same

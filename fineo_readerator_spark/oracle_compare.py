@@ -6,8 +6,8 @@ stringified VALUES but never TYPES — the oracle's un-cast `sum()` emitted a
 DuckDB HUGEINT (Arrow `decimal128(38,0)`) against Spark's BIGINT, a drift
 that str()-compare cannot see but a driver that canonicalizes values
 through Arrow/pandas can.  This module gives every harness (the pytest
-parity gate, scripts/verify_oracles.py, scripts/verify_window.py) one
-shared answer to "do these two result schemas mean the same thing?".
+parity gate and scripts/verify_oracles.py, including its --window replay)
+one shared answer to "do these two result schemas mean the same thing?".
 
 Kinds are deliberately STRICT: integer widths are distinguished, DECIMAL
 keeps its scale (the scale decides how a value renders), HUGEINT never

@@ -1,9 +1,10 @@
 """Driver-contract queries for the LLM-data-pipeline operators over the
 ``documents`` and ``embeddings`` tables.
 
-EVERY query here carries an exact DuckDB oracle: the fuzzy-dedup paths use
-portable md5-leaf hashing (llm_ops.dedup_oracles replays signatures, banding,
-verification and clustering bit-for-bit), the multimodal fakes are
+EVERY query here carries an exact DuckDB oracle: the fuzzy-dedup operators
+have one hash family, the md5 leaf that Spark, DuckDB and Python all compute
+(llm_ops.dedup_oracles replays signatures, banding, verification and
+clustering bit-for-bit), the multimodal fakes are
 sha256/length-derived and replayed positionally, and the IVF ANN uses a
 deterministic data-sampled codebook instead of trained k-means (the trained
 variant keeps its brute-force-equivalence test in tests/test_llm_ops.py)."""
@@ -176,7 +177,6 @@ def d_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_k=3,
         threshold=0.6,
         max_df=20,
-        portable=True,
         min_kept=3,
     ).orderBy("id_a", "id_b")
 
@@ -1368,9 +1368,9 @@ def d_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("mirror:"), F.col("source")).alias("source"),
         )
     )
-    return cluster_source_purity(
-        mirrored, "doc_id", "text", "source", portable=True
-    ).orderBy("cluster_id")
+    return cluster_source_purity(mirrored, "doc_id", "text", "source").orderBy(
+        "cluster_id"
+    )
 
 
 _PURITY_CORPUS_SQL = (
@@ -1398,8 +1398,7 @@ def d_dup_inflation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fineo_readerator_spark.llm_ops.dedup import dup_inflation
 
     return dup_inflation(
-        _docs_with_dups(spark, sf_dir), "doc_id", "text",
-        weight_col="n_chars", portable=True,
+        _docs_with_dups(spark, sf_dir), "doc_id", "text", weight_col="n_chars"
     )
 
 
@@ -1423,8 +1422,7 @@ def d_edit_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs_with_dups(spark, sf_dir)
     cand = minhash_lsh_pairs(
-        docs, "doc_id", "text", num_hashes=64, bands=16, threshold=0.5,
-        portable=True,
+        docs, "doc_id", "text", num_hashes=64, bands=16, threshold=0.5
     )
     return edit_distance_verify(docs, cand, "doc_id", "text").orderBy(
         "id_a", "id_b"
@@ -1457,11 +1455,11 @@ def _simhash_dedup_oracle() -> str:
 def d_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs over documents + a duplicated copy (the
     shifted copies are exact dups, so every (id, id+SHIFT) pair must surface).
-    Portable md5-leaf hashing, so the DuckDB oracle replays the signatures,
+    The md5 leaf hash lets the DuckDB oracle replay the signatures,
     banding and verification bit-for-bit."""
     return minhash_lsh_pairs(
         _docs_with_dups(spark, sf_dir), "doc_id", "text",
-        num_hashes=64, bands=16, threshold=0.7, portable=True,
+        num_hashes=64, bands=16, threshold=0.7,
     )
 
 
@@ -1476,7 +1474,7 @@ def d_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return minhash_audit(
         _docs_with_dups(spark, sf_dir), "doc_id", "text",
-        num_hashes=64, bands=16, threshold=0.7, portable=True, sample_mod=5,
+        num_hashes=64, bands=16, threshold=0.7, sample_mod=5,
     )
 
 
@@ -1490,11 +1488,11 @@ def _d_minhash_audit_oracle() -> str:
 
 def d_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full fuzzy-dedup pass (exact cascade + LSH + label propagation) over
-    the doubled corpus, portable hashing; the oracle replays the whole
-    pipeline including the clustering (recursive-CTE transitive closure)."""
+    the doubled corpus; the oracle replays the whole pipeline including
+    the clustering (recursive-CTE transitive closure)."""
     out = minhash_dedup(
         _docs_with_dups(spark, sf_dir), "doc_id", "text",
-        num_hashes=64, bands=16, threshold=0.7, portable=True,
+        num_hashes=64, bands=16, threshold=0.7,
     )
     return out.select("doc_id", "n_chars")
 
@@ -2839,9 +2837,9 @@ def d_best_rep_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars") + 23).alias("n_chars"),
     )
     corpus = docs.unionByName(longer)
-    return minhash_dedup_keep_best(
-        corpus, "doc_id", "n_chars", "text", portable=True
-    ).select("doc_id", "n_chars")
+    return minhash_dedup_keep_best(corpus, "doc_id", "n_chars", "text").select(
+        "doc_id", "n_chars"
+    )
 
 
 def _d_best_rep_oracle() -> str:
@@ -2861,9 +2859,7 @@ def d_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster id (llm_ops.dedup.minhash_cluster_labels)."""
     from fineo_readerator_spark.llm_ops.dedup import minhash_cluster_labels
 
-    return minhash_cluster_labels(
-        _docs_with_dups(spark, sf_dir), "doc_id", portable=True
-    )
+    return minhash_cluster_labels(_docs_with_dups(spark, sf_dir), "doc_id")
 
 
 def _d_dup_clusters_oracle() -> str:
@@ -2882,9 +2878,7 @@ def d_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (clusters are ≤ corpus-sized, sizes a handful of rows)."""
     from fineo_readerator_spark.llm_ops.dedup import minhash_cluster_labels
 
-    labels = minhash_cluster_labels(
-        _docs_with_dups(spark, sf_dir), "doc_id", portable=True
-    )
+    labels = minhash_cluster_labels(_docs_with_dups(spark, sf_dir), "doc_id")
     return (
         labels.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("size"))
@@ -2946,9 +2940,7 @@ def p_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     same side — the eval-contamination guard a row-hash split lacks."""
     from fineo_readerator_spark.llm_ops.sampling import leakage_safe_split
 
-    out = leakage_safe_split(
-        _docs_with_dups(spark, sf_dir), "doc_id", portable=True
-    )
+    out = leakage_safe_split(_docs_with_dups(spark, sf_dir), "doc_id")
     return out.select("doc_id", "cluster_id", "split")
 
 
@@ -3000,11 +2992,10 @@ def ensure_minhash_store(spark: SparkSession, sf_dir: str) -> str:
 
     path = _minhash_store_path(sf_dir)
     fp = source_fingerprint(sf_dir, "documents")
-    # meta-less = built before params were persisted with the store (this
-    # one used portable=True, NOT the pre-meta fallback defaults) — rebuild
+    # meta-less = built before params were persisted with the store — rebuild
     if not snapshot_is_fresh(path, fp) or not (path / "_store_meta.json").exists():
         base = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 != 0)
-        write_signature_store(base, str(path), portable=True)
+        write_signature_store(base, str(path))
         stamp_snapshot(path, fp)
     return str(path)
 
@@ -3031,11 +3022,9 @@ def _d_incremental_oracle() -> str:
 
 
 def d_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup dedup, portable hashing — oracle-checked end to end
-    like d_minhash_dedup."""
-    out = simhash_dedup(
-        _docs_with_dups(spark, sf_dir), "doc_id", "text", max_hamming=3, portable=True
-    )
+    """SimHash near-dup dedup — oracle-checked end to end like
+    d_minhash_dedup."""
+    out = simhash_dedup(_docs_with_dups(spark, sf_dir), "doc_id", "text", max_hamming=3)
     return out.select("doc_id", "n_chars")
 
 
@@ -4272,8 +4261,7 @@ def t_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grams out of the one shared shingle pass instead of re-hashing the
     # slice (r11: removed a second full-corpus-CPU shingle stage)
     return ngram_novelty(
-        docs, ref, "doc_id", "text", portable=True,
-        ref_pred=F.col("__id") % 10 == 0,
+        docs, ref, "doc_id", "text", ref_pred=F.col("__id") % 10 == 0,
     ).orderBy("doc_id")
 
 

@@ -352,7 +352,7 @@ def st_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 5 == 0)
     )
     sig = minhash_signature_from(
-        shingle_hashes(F.col("text"), meta["shingle_k"], portable=meta["portable"]),
+        shingle_hashes(F.col("text"), meta["shingle_k"]),
         meta["num_hashes"],
         meta["seed"],
     )
@@ -482,7 +482,7 @@ def st_store_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="fineo_store_maintain_")
     store = f"{tmp}/store"
     base = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 != 0)
-    write_signature_store(base, store, portable=True)
+    write_signature_store(base, store)
     delta = (
         SourceSpec(kind="historical", path=f"{sf_dir}/documents.parquet")
         .read_stream(spark)

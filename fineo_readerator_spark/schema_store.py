@@ -117,7 +117,18 @@ class MetricSchema:
             "metric": self.metric,
             "fields": [f.to_dict() for f in self.fields],
             "track_unknown": self.track_unknown,
+            "timestamp_field": self.timestamp_field,
         }
+
+    @classmethod
+    def from_dict(cls, d: dict) -> "MetricSchema":
+        return cls(
+            org=d["org"],
+            metric=d["metric"],
+            fields=[FieldDef.from_dict(f) for f in d.get("fields", [])],
+            track_unknown=d.get("track_unknown", False),
+            timestamp_field=d.get("timestamp_field", TIMESTAMP_KEY),
+        )
 
 
 class SchemaStore:
@@ -171,16 +182,25 @@ class SchemaStore:
         return list(self._sources.get((org, metric), []))
 
     # -- (de)serialization ------------------------------------------------
+    def _entries(self) -> list[dict]:
+        """One serialized {schema, sources} entry per metric, sorted by
+        (org, metric) — the single format of the JSON and the tenant table."""
+        return [
+            {
+                "schema": schema.to_dict(),
+                "sources": [s.to_dict() for s in self._sources.get(key, [])],
+            }
+            for key, schema in sorted(self._metrics.items())
+        ]
+
+    def _load_entry(self, entry: dict) -> None:
+        schema = MetricSchema.from_dict(entry["schema"])
+        self.register_metric(schema)
+        for s in entry.get("sources", []):
+            self.add_source(schema.org, schema.metric, SourceSpec.from_dict(s))
+
     def to_json(self) -> str:
-        out = []
-        for (org, metric), schema in sorted(self._metrics.items()):
-            out.append(
-                {
-                    "schema": schema.to_dict(),
-                    "sources": [s.to_dict() for s in self._sources.get((org, metric), [])],
-                }
-            )
-        return json.dumps({"metrics": out}, indent=2)
+        return json.dumps({"metrics": self._entries()}, indent=2)
 
     # -- stored tenant table (OrgLoader parity) ----------------------------
     def write_tenant_table(self, spark, path: str) -> None:
@@ -191,13 +211,9 @@ class SchemaStore:
         `FineoStoragePluginConfig` orgs); this is the stored-table half,
         re-expressed as a parquet registry any metadata store could serve.
         Registry-sized data (rows = #metrics), never the data path."""
-        rows = []
-        for (org, metric), schema in sorted(self._metrics.items()):
-            entry = {
-                "schema": schema.to_dict(),
-                "sources": [s.to_dict() for s in self._sources.get((org, metric), [])],
-            }
-            rows.append((org, metric, json.dumps(entry)))
+        rows = [
+            (e["schema"]["org"], e["schema"]["metric"], json.dumps(e)) for e in self._entries()
+        ]
         spark.createDataFrame(
             rows, "org string, metric string, entry_json string"
         ).coalesce(1).write.mode("overwrite").parquet(path)
@@ -212,31 +228,12 @@ class SchemaStore:
         list."""
         store = cls()
         for r in spark.read.parquet(path).collect():
-            entry = json.loads(r.entry_json)
-            sd = entry["schema"]
-            schema = MetricSchema(
-                org=sd["org"],
-                metric=sd["metric"],
-                fields=[FieldDef.from_dict(f) for f in sd.get("fields", [])],
-                track_unknown=sd.get("track_unknown", False),
-            )
-            store.register_metric(schema)
-            for s in entry.get("sources", []):
-                store.add_source(schema.org, schema.metric, SourceSpec.from_dict(s))
+            store._load_entry(json.loads(r.entry_json))
         return store
 
     @classmethod
     def from_json(cls, text: str) -> "SchemaStore":
         store = cls()
         for entry in json.loads(text)["metrics"]:
-            sd = entry["schema"]
-            schema = MetricSchema(
-                org=sd["org"],
-                metric=sd["metric"],
-                fields=[FieldDef.from_dict(f) for f in sd.get("fields", [])],
-                track_unknown=sd.get("track_unknown", False),
-            )
-            store.register_metric(schema)
-            for s in entry.get("sources", []):
-                store.add_source(schema.org, schema.metric, SourceSpec.from_dict(s))
+            store._load_entry(entry)
         return store

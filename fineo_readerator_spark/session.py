@@ -17,6 +17,30 @@ from pyspark.sql.types import StructType
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+# Confs that every parquet read in this repo REQUIRES, and that are
+# runtime-settable: get_spark sets them on the builder, and because the
+# driver's correctness harness calls queries() callables on a vanilla
+# session it builds itself (entry() may never run), each read entry point
+# also applies them idempotently (ensure_io_confs).
+_IO_CONFS = {
+    # current testdata stores events.ts as TIMESTAMP(MICROS) (reads as
+    # TIMESTAMP_NTZ), where this is a no-op; earlier fixture generations
+    # used TIMESTAMP(NANOS), which Spark can only read as raw epoch-nanos
+    # longs under this legacy conf.  All conversions go through the
+    # type-adaptive functions.epoch_millis / epoch_ms() derive token.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # deterministic timestamp rendering across engines/runs; the DuckDB
+    # oracle also operates in UTC
+    "spark.sql.session.timeZone": "UTC",
+    # Spark 4 defaults ANSI on; pinned so the documented overflow semantics
+    # (arithmetic past decimal(38,0)/int64 RAISES rather than silently
+    # wrapping/NULLing) hold regardless of the deployment's spark-defaults
+    # or a legacy-mode driver session — every exact-integer convention in
+    # this repo is designed and tested under ANSI
+    "spark.sql.ansi.enabled": "true",
+}
+
+
 def get_spark(
     app_name: str = "fineo-readerator-spark",
     shuffle_partitions: int | None = None,
@@ -38,25 +62,11 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.sql.session.timeZone", "UTC")
-        # Spark 4 defaults ANSI on; pin it so the documented overflow
-        # semantics (arithmetic past decimal(38,0)/int64 RAISES rather than
-        # silently wrapping/NULLing) are guaranteed regardless of the
-        # deployment's spark-defaults — every exact-integer convention in
-        # this repo is designed and tested under ANSI (r10 ADVICE)
-        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # current testdata stores events.ts as TIMESTAMP(MICROS) (reads as
-        # TIMESTAMP_NTZ); earlier fixture generations used TIMESTAMP(NANOS),
-        # which Spark can only read as raw nanos longs under this legacy
-        # conf.  Keeping it on is a no-op for micros data and makes a driver
-        # flip back to nanos readable; all conversions go through the
-        # type-adaptive functions.epoch_millis / epoch_ms() derive token.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode hosts driver + all 32 task threads + block/shuffle
@@ -86,7 +96,7 @@ def get_spark(
         # ensure_io_confs cannot apply it to a session the driver hands in.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
-    for k, v in (extra_confs or {}).items():
+    for k, v in {**_IO_CONFS, **(extra_confs or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -105,22 +115,6 @@ def codegen_compiles(spark: SparkSession) -> int:
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
-
-# Confs that every parquet read in this repo REQUIRES, and that are
-# runtime-settable: the driver's correctness harness calls queries()
-# callables on a vanilla session it builds itself (entry() may never run),
-# so each read entry point applies these idempotently.
-_IO_CONFS = {
-    # no-op on the current TIMESTAMP(MICROS) fixtures; lets TIMESTAMP(NANOS)
-    # fixture generations read as epoch-nano longs instead of erroring
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # deterministic timestamp rendering across engines/runs
-    "spark.sql.session.timeZone": "UTC",
-    # the repo's exact-integer arithmetic conventions assume ANSI overflow
-    # semantics (raise, never wrap) — Spark 4's default, pinned so a
-    # legacy-mode driver session can't silently change query results
-    "spark.sql.ansi.enabled": "true",
-}
 
 # Perf-only session defaults (results unchanged), applied ONLY when the conf
 # still holds its out-of-the-box value — a deliberate setting (get_spark, a

@@ -39,6 +39,9 @@ HISTORICAL = "historical"
 NEARLINE = "nearline"
 NEARLINE_ITEMS = "nearline_items"
 KINDS = (HISTORICAL, NEARLINE, NEARLINE_ITEMS)
+# file formats a source reads through ``spark.read.format`` (batch) and
+# ``spark.readStream.format`` (streaming); gzip json/csv are native to them
+_FS_FORMATS = ("parquet", "json", "csv", "orc")
 
 
 @dataclass(frozen=True)
@@ -90,8 +93,8 @@ class SourceSpec:
 
     kind: str  # historical | nearline | nearline_items
     path: str
-    # parquet | json | csv | orc (gzip json/csv are native to those readers);
-    # csv defaults to header=true + schema inference unless options override
+    # one of _FS_FORMATS; csv defaults to header=true + schema inference
+    # unless options override
     fmt: str = "parquet"
     time_range: TimeRange = field(default_factory=TimeRange)
     # Does the stored data carry companykey/metrictype columns (dfs layout) or
@@ -124,6 +127,8 @@ class SourceSpec:
     def __post_init__(self) -> None:
         if self.kind not in KINDS:
             raise ValueError(f"unknown source kind {self.kind!r}")
+        if self.fmt not in _FS_FORMATS:
+            raise ValueError(f"unsupported source format {self.fmt!r}; one of {_FS_FORMATS}")
 
     def _resolve_derive_sql(self, df: DataFrame, sql: str) -> str:
         """Expand ``epoch_ms(col)`` tokens per the stored column's dtype."""
@@ -159,15 +164,7 @@ class SourceSpec:
             reader = reader.option("header", "true").option("inferSchema", "true")
         for k, v in self.options.items():
             reader = reader.option(k, v)
-        if self.fmt == "parquet":
-            return reader.parquet(self.path)
-        if self.fmt == "json":
-            return reader.json(self.path)
-        if self.fmt == "csv":
-            return reader.csv(self.path)
-        if self.fmt == "orc":
-            return reader.orc(self.path)
-        raise ValueError(f"unsupported source format {self.fmt!r}")
+        return reader.format(self.fmt).load(self.path)
 
     def read(self, spark: SparkSession) -> DataFrame:
         return self._apply_derive(self._read_raw(spark))
@@ -196,17 +193,7 @@ class SourceSpec:
         path = self.path
         if os.path.isfile(path):
             path = os.path.join(os.path.dirname(path), "{" + os.path.basename(path) + "}")
-        if self.fmt == "parquet":
-            df = reader.parquet(path)
-        elif self.fmt == "json":
-            df = reader.json(path)
-        elif self.fmt == "csv":
-            df = reader.csv(path)
-        elif self.fmt == "orc":
-            df = reader.orc(path)
-        else:
-            raise ValueError(f"unsupported streaming source format {self.fmt!r}")
-        return self._apply_derive(df)
+        return self._apply_derive(reader.format(self.fmt).load(path))
 
     def to_dict(self) -> dict:
         return {
@@ -238,9 +225,6 @@ class SourceSpec:
             raw_ts_col=d.get("raw_ts_col"),
             raw_ts_per_milli=d.get("raw_ts_per_milli", 1),
         )
-
-
-_FS_FORMATS = ("parquet", "json", "csv", "orc")
 
 
 def discover_fs_sources(

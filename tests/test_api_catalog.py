@@ -133,14 +133,15 @@ def test_errors_gzip_json_date_partitioned(spark, tmp_path):
 def test_tenant_table_round_trip_and_discovery(spark, tmp_path):
     """The registry persists as a stored tenant table and a fresh store
     discovers every tenant from it (`OrgLoader.java:30-40` stored-table
-    path): schemas, aliases, sources and track_unknown all survive, and a
+    path): schemas, aliases, sources, track_unknown and a non-default
+    timestamp field all survive, in the table and in the JSON form, and a
     tenant that exists only in the stored table resolves to working SQL."""
     rows = [
-        {"companykey": "gamma", "metrictype": "m1", "timestamp": i, "writetime": i, "stored_f": i * 2}
+        {"companykey": "gamma", "metrictype": "m1", "ts_ms": i, "writetime": i, "stored_f": i * 2}
         for i in range(4)
     ]
     spark.createDataFrame(
-        rows, "companykey string, metrictype string, timestamp long, writetime long, stored_f int"
+        rows, "companykey string, metrictype string, ts_ms long, writetime long, stored_f int"
     ).write.mode("overwrite").parquet(str(tmp_path / "hist"))
 
     st = SchemaStore()
@@ -150,22 +151,27 @@ def test_tenant_table_round_trip_and_discovery(spark, tmp_path):
             metric="m1",
             fields=[FieldDef("f_canon", "long", aliases=["stored_f"])],
             track_unknown=True,
+            timestamp_field="ts_ms",
         )
     )
     st.add_source("gamma", "m1", SourceSpec(kind="historical", path=str(tmp_path / "hist")))
     st.write_tenant_table(spark, str(tmp_path / "registry"))
 
+    from_json = SchemaStore.from_json(st.to_json())
+    assert from_json.get_metric("gamma", "m1").timestamp_field == "ts_ms"
+    assert from_json.to_json() == st.to_json()
+
     loaded = SchemaStore.from_tenant_table(spark, str(tmp_path / "registry"))
     assert loaded.orgs() == ["gamma"] and loaded.metrics("gamma") == ["m1"]
     schema = loaded.get_metric("gamma", "m1")
-    assert schema.track_unknown is True
+    assert schema.track_unknown is True and schema.timestamp_field == "ts_ms"
     assert schema.fields[0].candidates == ["f_canon", "stored_f"]
     assert [s.kind for s in loaded.get_sources("gamma", "m1")] == ["historical"]
 
     # the discovered tenant answers SQL through the alias projection
     tenant = TenantSession(spark, loaded, "gamma")
-    got = tenant.sql("SELECT timestamp, f_canon FROM m1 ORDER BY timestamp").collect()
-    assert [(r.timestamp, r.f_canon) for r in got] == [(0, 0), (1, 2), (2, 4), (3, 6)]
+    got = tenant.sql("SELECT ts_ms, f_canon FROM m1 ORDER BY ts_ms").collect()
+    assert [(r.ts_ms, r.f_canon) for r in got] == [(0, 0), (1, 2), (2, 4), (3, 6)]
 
 
 def test_multi_tenant_isolation(spark, tmp_path):

@@ -132,7 +132,7 @@ def test_signature_store_probe_uses_stored_params(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "identical text stored right here today")], "doc_id long, text string"
     )
-    write_signature_store(base, store, bands=8, seed=7, portable=True)
+    write_signature_store(base, store, bands=8, seed=7)
     assert read_store_meta(spark, store)["bands"] == 8
     delta = spark.createDataFrame(
         [(10, "identical text stored right here today")], "doc_id long, text string"

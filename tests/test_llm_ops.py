@@ -49,12 +49,10 @@ def docs(spark):
 # --- pure-python reference implementations --------------------------------
 
 
-def _xxhash64_ref(spark, values):
-    """Spark's xxhash64 via a tiny DataFrame (the golden source of truth for
-    the hash the Catalyst pipeline uses)."""
-    df = spark.createDataFrame([(v,) for v in values], "s string")
-    rows = df.select("s", F.pmod(F.xxhash64("s"), F.lit(_MERSENNE_P)).alias("h")).collect()
-    return {r.s: r.h for r in rows}
+def _md5_leaf_ref(s):
+    """The shingle leaf hash in pure Python: the first 15 hex chars of md5
+    as an integer, reduced mod the Mersenne prime like ``shingle_hashes``."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % _MERSENNE_P
 
 
 def _py_shingles(text, k=3):
@@ -72,10 +70,8 @@ def test_minhash_signature_matches_python_reference(spark, docs):
         for r in docs.select("doc_id", minhash_signature(F.col("text"), 16, 3, seed=7).alias("sig")).collect()
     }
     params = _hash_params(16, seed=7)
-    all_shingles = {s for _, t in CORPUS for s in _py_shingles(t)}
-    href = _xxhash64_ref(spark, sorted(all_shingles))
     for doc_id, text in CORPUS:
-        hs = [href[s] for s in _py_shingles(text)]
+        hs = [_md5_leaf_ref(s) for s in _py_shingles(text)]
         expected = [min((a * h + b) % _MERSENNE_P for h in hs) for a, b in params]
         assert sigs[doc_id] == expected, f"doc {doc_id}"
 
@@ -1488,6 +1484,50 @@ def test_signature_store_interrupted_rebuild_reads_incomplete(spark, tmp_path, m
     assert read_store_meta(spark, store)["seed"] == 99
 
 
+def _store_with_portable_meta(spark, tmp_path, portable):
+    """(store, meta text, delta): a store over one doc whose meta carries
+    the ``"portable"`` key that older builds wrote (``False`` meant
+    xxhash64-signed shingles), and a delta holding a copy of that doc."""
+    import json
+
+    from fineo_readerator_spark.llm_ops.dedup import (
+        _fs_read_text,
+        _fs_write_text,
+        write_signature_store,
+    )
+
+    store = str(tmp_path / "store")
+    text = "the quick brown fox jumps over the lazy dog today"
+    write_signature_store(spark.createDataFrame([(1, text)], "doc_id long, text string"), store)
+    # through the Hadoop FS, which keeps the meta's checksum file in step
+    meta_file = f"{store}/_store_meta.json"
+    meta = {**json.loads(_fs_read_text(spark, meta_file)), "portable": portable}
+    _fs_write_text(spark, meta_file, json.dumps(meta))
+    delta = spark.createDataFrame([(10, text)], "doc_id long, text string")
+    return store, _fs_read_text(spark, meta_file), delta
+
+
+def test_signature_store_signed_with_xxhash_is_refused(spark, tmp_path):
+    """An md5-leaf probe of an xxhash64-signed store would return false
+    negatives with no error, so such a store must be rebuilt first."""
+    from fineo_readerator_spark.llm_ops.dedup import incremental_minhash_flags
+
+    store, _, delta = _store_with_portable_meta(spark, tmp_path, False)
+    with pytest.raises(ValueError, match="rebuild it with write_signature_store"):
+        incremental_minhash_flags(store, delta)
+
+
+def test_signature_store_signed_with_md5_probes_without_rebuild(spark, tmp_path):
+    """Stores built with the md5 leaf before the meta dropped its
+    ``"portable": true`` key still probe as they are."""
+    from fineo_readerator_spark.llm_ops.dedup import _fs_read_text, incremental_minhash_flags
+
+    store, meta_text, delta = _store_with_portable_meta(spark, tmp_path, True)
+    out = incremental_minhash_flags(store, delta).collect()[0]
+    assert out.is_dup and out.n_dup_bases == 1 and out.best_est == 1.0
+    assert _fs_read_text(spark, f"{store}/_store_meta.json") == meta_text
+
+
 def test_span_overlap_pairs_finds_embedded_verbatim_span(spark):
     from fineo_readerator_spark.llm_ops.dedup import span_overlap_pairs
 
@@ -1645,7 +1685,7 @@ def test_probe_store_deterministic_with_duplicate_store_rows(spark, tmp_path):
         return minhash_signatures(
             spark.createDataFrame([(1, text)], "doc_id long, text string"),
             "doc_id", "text",
-            meta["num_hashes"], meta["shingle_k"], meta["seed"], meta["portable"],
+            meta["num_hashes"], meta["shingle_k"], meta["seed"],
         )
 
     # replay: append the SAME sig twice — the probe result must not change
@@ -3015,7 +3055,7 @@ def test_cluster_source_purity_hand_clusters(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string, n_chars long, source string")
     out = sorted(
         (r.cluster_id, r.n_members, r.n_sources, r.top_share_ppm)
-        for r in cluster_source_purity(df, portable=True).collect()
+        for r in cluster_source_purity(df).collect()
     )
     assert (1, 2, 2, 500000) in out or any(
         m >= 2 and s >= 2 and p == 500000 for _, m, s, p in out
@@ -3092,12 +3132,12 @@ def test_dup_inflation_hand_values(spark):
     rows = [(1, t, len(t)), (2, t, len(t)),
             (3, "a totally different text with no twin in this corpus", 53)]
     df = spark.createDataFrame(rows, "doc_id long, text string, n_chars long")
-    r = dup_inflation(df, weight_col="n_chars", portable=True).collect()[0]
+    r = dup_inflation(df, weight_col="n_chars").collect()[0]
     total = 2 * len(t) + 53
     assert (r.n_docs, r.docs_in_clusters, r.removable_docs) == (3, 2, 1)
     assert (r.total_weight, r.removable_weight) == (total, len(t))
     assert r.removable_ppm == (len(t) * 2_000_000 + total) // (total * 2)
     # doc-count weighting: removable 1 of 3
-    r2 = dup_inflation(df, portable=True).collect()[0]
+    r2 = dup_inflation(df).collect()[0]
     assert (r2.total_weight, r2.removable_weight) == (3, 1)
     assert r2.removable_ppm == 333333

@@ -2,7 +2,7 @@ from __future__ import annotations
 
 import pytest
 
-from fineo_readerator_spark.session import codegen_compiles, is_local_master
+from fineo_readerator_spark.session import codegen_compiles, ensure_io_confs, is_local_master
 
 
 def test_codegen_cache_holds_a_working_set_above_spark_default(spark):
@@ -37,3 +37,11 @@ def test_is_local_master(master, local):
     """Only in-process masters get the local shapes; ``local-cluster`` has
     separate executor JVMs and is treated like a cluster."""
     assert is_local_master(master) is local
+
+
+def test_ensure_io_confs_changes_nothing_on_a_get_spark_session(spark):
+    """``get_spark`` already sets every conf ``ensure_io_confs`` applies, from
+    the same dict, so the read entry points find nothing left to set."""
+    before = spark.conf.getAll
+    ensure_io_confs(spark)
+    assert spark.conf.getAll == before

@@ -4,6 +4,8 @@ stores, each with its own time window."""
 
 from __future__ import annotations
 
+import pytest
+
 from fineo_readerator_spark.recombinator import build_metric_df
 from fineo_readerator_spark.schema_store import FieldDef, MetricSchema, SchemaStore
 from fineo_readerator_spark.sources import SourceSpec, TimeRange
@@ -60,6 +62,15 @@ def test_all_formats_union_into_one_metric(spark, tmp_path):
     out = build_metric_df(spark, store, ORG, METRIC)
     vals = [r.val for r in out.select("val").orderBy("timestamp").collect()]
     assert vals == [0, 1, 2, 100, 101, 102, 200, 201, 202, 300, 301, 302]
+
+
+def test_unsupported_format_fails_when_the_spec_is_built():
+    """A bad ``fmt`` is refused at construction and on load from JSON, not
+    at the first read."""
+    with pytest.raises(ValueError, match="avro"):
+        SourceSpec(kind="historical", path="x", fmt="avro")
+    with pytest.raises(ValueError, match="avro"):
+        SourceSpec.from_dict({"kind": "historical", "path": "x", "fmt": "avro"})
 
 
 def test_csv_orc_streaming_reads(spark, tmp_path):

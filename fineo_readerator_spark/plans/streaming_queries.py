@@ -27,7 +27,6 @@ from fineo_readerator_spark.streaming import (
     build_metric_stream,
     dedup_stream,
     interval_join_streams,
-    read_metric_stream,
     run_available_now,
     sessionize,
     stateful_running_totals,
@@ -52,7 +51,7 @@ def _drain(df: DataFrame, name: str, mode: str) -> DataFrame:
 def st_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window rollup per event_type over the metric
     stream, drained complete (all windows, including still-open ones)."""
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     rolled = windowed_rollup(
         stream,
         "event_time",
@@ -78,7 +77,7 @@ GROUP BY 1, 2, 3
 def st_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based session windows per user (built-in ``session_window`` state
     merging): a session closes one day after its last event."""
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     sessions = sessionize(
         stream,
         "event_time",
@@ -117,7 +116,7 @@ def st_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator (``applyInPandasWithState``): per-user running
     count/sum/max accumulated across micro-batches.  The drain's last emission
     per key (the one with the highest running count) is the final total."""
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC).withColumn(
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC).withColumn(
         "value_cents", F.expr(CENTS).cast("double")
     )
     totals = stateful_running_totals(stream, "user_id", "value_cents")
@@ -143,7 +142,7 @@ FROM events GROUP BY user_id
 def st_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup within the watermark: first arrival per
     (user_id, event_type) wins; the surviving key set is deterministic."""
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     deduped = dedup_stream(stream, ["user_id", "event_type"], watermark="1 day")
     return _drain(deduped, "st_dedup_sink", "append").select("user_id", "event_type")
 
@@ -159,7 +158,7 @@ def st_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one shuffle on window+segment)."""
     from fineo_readerator_spark.plans.registry import load
 
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     dim = (
         load(spark, sf_dir, "customer")
         .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
@@ -192,7 +191,7 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     same user's purchases within the following hour.  Watermarks on both
     sides + the two-sided time bound let Spark evict join state — the shape
     that runs forever on unbounded inputs."""
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     clicks = stream.filter(F.col("event_type") == "click").select(
         F.col("user_id"),
         F.col("event_id").alias("click_id"),
@@ -239,7 +238,7 @@ def st_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     idiomatic workaround, and the DuckDB oracle replays both halves."""
     from fineo_readerator_spark.llm_ops.sketches import hll_finalize, hll_registers
 
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     regs = hll_registers(
         stream, F.col("user_id").cast("string"), group_cols=("event_type",)
     )
@@ -270,7 +269,7 @@ def st_hll_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_rolling_finalize,
     )
 
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     keyed = stream.select(
         F.expr(f"unix_millis(event_time) div {DAY_MS}").alias("day"),
         F.col("user_id").cast("string").alias("k"),
@@ -303,7 +302,7 @@ def st_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     one query)."""
     from fineo_readerator_spark.llm_ops.sketches import quantiles_from_bins
 
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     v = F.col("value").cast("double")
     bins = (
         stream.filter(v.isNotNull())
@@ -680,7 +679,7 @@ def st_audit_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     within a window of landing instead of at the next batch audit.  State
     is one count row per open window; violations are conditional
     aggregates fused into the SAME windowed agg (no second pass)."""
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     uid = F.col("user_id")
     dirty = stream.select(
         "event_time",
@@ -716,7 +715,7 @@ def st_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     shows WHICH gate started eating the feed within a window of landing.
     State is one count row per (open window, stage) — ≤ 4 stages.  NULL
     gate verdicts FAIL (coalesce-pinned, the quality_funnel contract)."""
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     uid = F.col("user_id")
     dirty = stream.select(
         "event_time",
@@ -791,7 +790,7 @@ def st_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     window; everything after the drain is (windows × categories)-sized."""
     from fineo_readerator_spark.llm_ops.sampling import windowed_drift
 
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     counts = windowed_rollup(
         stream,
         "event_time",
@@ -828,7 +827,7 @@ def st_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fineo_readerator_spark.operators.anomaly import rolling_zscore
     from fineo_readerator_spark.operators.gapfill import gap_fill
 
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     counts = windowed_rollup(
         stream,
         "event_time",
@@ -869,7 +868,7 @@ def st_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     full pipeline."""
     from fineo_readerator_spark.operators.cohort import retention_matrix
 
-    stream = read_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
+    stream = build_metric_stream(spark, events_store(sf_dir), ORG, METRIC)
     daily = windowed_rollup(
         stream,
         "event_time",

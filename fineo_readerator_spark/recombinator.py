@@ -4,10 +4,15 @@ This is the Spark-first re-expression of the reference's core plan shape
 (`FineoRecombinatorRule.java:49-177` + `RecombinatorRecordBatch.java:79-227`):
 
     per live source:
-        scan → [expand KV items] → org/metric filter → alias→canonical
-        projection with CASTs (+ base64 decode) → [_fm unknown-field map]
-        → [anti-overlap cutover filter on historical]
+        scan → [expand KV items] → org/metric filter → [source window and
+        anti-overlap cutover filters] → alias→canonical projection with
+        CASTs (+ base64 decode) → [_fm unknown-field map]
     UNION ALL all sources → ORDER BY timestamp
+
+The per-source pipeline (``_source_branch``, unioned by ``_union_branches``)
+is the one build for batch and streams: ``build_metric_df`` runs it over
+``SourceSpec.read`` and ``streaming.build_metric_stream`` over
+``SourceSpec.read_stream``; only their endings differ.
 
 Where the reference needed planner rules (Drill tables must pre-declare one
 RelNode), we compose DataFrames programmatically at resolve time and let
@@ -22,13 +27,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
 from functools import reduce
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fineo_readerator_spark.operators.expander import expand_items, split_compound_key
+from fineo_readerator_spark.operators.expander import PARTITION_KEY, expand_items, split_compound_key
 from fineo_readerator_spark.pruning import RangeSet, ranges_from_predicate, select_sources
 from fineo_readerator_spark.schema_store import (
     INTERNAL_FIELDS,
@@ -145,19 +150,19 @@ def _org_metric_filter(df: DataFrame, source: SourceSpec, org: str, metric: str)
     return df
 
 
-def _range_condition(ts: Column, r: TimeRange) -> Column:
-    cond = F.lit(True)
-    if r.start is not None:
-        cond = cond & (ts >= F.lit(r.start))
-    if r.end is not None:
-        cond = cond & (ts < F.lit(r.end))
-    return cond
+def _in_ranges(col: Column, ranges: list[TimeRange], lit: Callable[[int], Column] = F.lit) -> Column:
+    """``col`` lies in any ``[start, end)`` of ``ranges``; ``lit`` turns an
+    epoch-millis bound into a literal of the column's type."""
 
+    def one(r: TimeRange) -> Column:
+        cond = F.lit(True)
+        if r.start is not None:
+            cond = cond & (col >= lit(r.start))
+        if r.end is not None:
+            cond = cond & (col < lit(r.end))
+        return cond
 
-def _ranges_filter(ts: Column, ranges: RangeSet) -> Optional[Column]:
-    if ranges.everything or not ranges.ranges:
-        return None
-    return reduce(lambda a, b: a | b, [_range_condition(ts, r) for r in ranges.ranges])
+    return reduce(lambda a, b: a | b, [one(r) for r in ranges])
 
 
 def _push_raw_ts_filters(
@@ -196,20 +201,12 @@ def _push_raw_ts_filters(
             return b
         return F.lit(ms * n)
 
-    def cond(r: TimeRange) -> Column:
-        c = F.lit(True)
-        if r.start is not None:
-            c = c & (raw >= bound(r.start))
-        if r.end is not None:
-            c = c & (raw < bound(r.end))
-        return c
-
     if not ranges.everything and ranges.ranges:
-        df = df.filter(reduce(lambda a, b: a | b, [cond(r) for r in ranges.ranges]))
+        df = df.filter(_in_ranges(raw, ranges.ranges, bound))
     if src.kind == HISTORICAL and cutover is not None:
         df = df.filter(raw < bound(cutover))
     if src.enforce_range and not src.time_range.is_unbounded:
-        df = df.filter(cond(src.time_range))
+        df = df.filter(_in_ranges(raw, [src.time_range], bound))
     return df
 
 
@@ -221,6 +218,53 @@ def empty_metric_df(spark: SparkSession, schema: MetricSchema) -> DataFrame:
         fields.append(T.StructField(UNKNOWN_FIELDS_MAP, T.MapType(T.StringType(), T.StringType())))
     # JVM-local, so a metric with no live sources starts no Python workers
     return local_frame(spark, [], T.StructType(fields))
+
+
+def _source_branch(
+    df: DataFrame, src: SourceSpec, schema: MetricSchema, ranges: RangeSet, cutover: Optional[int]
+) -> DataFrame:
+    """One live source's canonical branch over its read frame ``df`` (batch
+    or stream): [KV item expansion / compound-key split] → org/metric filter
+    → source window → anti-overlap cutover on historical → raw-timestamp
+    filter twins → alias→canonical projection.  Every step is narrow."""
+    org, metric = schema.org, schema.metric
+    if src.kind == NEARLINE_ITEMS:
+        if src.compound_key:
+            # tenant hash-key equality on the STORED column, before the
+            # expander: a plain literal `=` reaches the parquet scan
+            # (row-group stats / dictionary skipping), where the post-split
+            # `substring(partition_key) = org` below never pushes.  This
+            # is the reference's Dynamo hash-key condition
+            # (`DynamoFineoCompoundKeyMapper.java:21-37`): at scale it is
+            # the difference between reading one tenant and every tenant.
+            df = df.filter(F.col(PARTITION_KEY) == F.lit(org + metric))
+        df = expand_items(df)
+        if src.compound_key:
+            df = split_compound_key(df, org, schema.timestamp_field)
+    df = _org_metric_filter(df, src, org, metric)
+    ts_col = F.col(schema.timestamp_field).cast("long")
+    if src.enforce_range and not src.time_range.is_unbounded:
+        df = df.filter(_in_ranges(ts_col, [src.time_range]))
+    if src.kind == HISTORICAL and cutover is not None:
+        # anti-overlap: nearline wins the overlap window (O5)
+        df = df.filter(ts_col < F.lit(cutover))
+    df = _push_raw_ts_filters(df, src, ranges, cutover)
+    return project_canonical(df, schema, src)
+
+
+def _union_branches(
+    spark: SparkSession, schema: MetricSchema, sources: list[SourceSpec], ranges: RangeSet,
+    read: Callable[[SourceSpec, SparkSession], DataFrame],
+) -> tuple[Optional[DataFrame], list[SourceSpec], Optional[int]]:
+    """UNION ALL of the canonical branches of the sources ``ranges`` keeps
+    live, each read by ``read`` (``SourceSpec.read`` or
+    ``SourceSpec.read_stream``).  Returns the union (None when no source is
+    live), the live sources and the anti-overlap cutover."""
+    live, cutover = select_sources(sources, ranges)
+    branches = [_source_branch(read(src, spark), src, schema, ranges, cutover) for src in live]
+    if not branches:
+        return None, live, cutover
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), branches), live, cutover
 
 
 def build_metric_df(
@@ -250,46 +294,8 @@ def build_metric_df(
     if time_range is not None:
         ranges = ranges.intersect(RangeSet.of(time_range))
 
-    live, cutover = select_sources(sources, ranges)
-    report = BuildReport(
-        considered=[s.path for s in sources],
-        scanned=[s.path for s in live],
-        skipped=[s.path for s in sources if s not in live],
-        cutover=cutover,
-    )
-
-    branches: list[DataFrame] = []
-    for src in live:
-        df = src.read(spark)
-        if src.kind == NEARLINE_ITEMS:
-            if src.compound_key:
-                # tenant hash-key equality on the STORED column, before the
-                # expander: a plain literal `=` reaches the parquet scan
-                # (row-group stats / dictionary skipping), where the post-split
-                # `substring(partition_key) = org` below never pushes.  This
-                # is the reference's Dynamo hash-key condition
-                # (`DynamoFineoCompoundKeyMapper.java:21-37`): at scale it is
-                # the difference between reading one tenant and every tenant.
-                from fineo_readerator_spark.operators.expander import PARTITION_KEY
-
-                df = df.filter(F.col(PARTITION_KEY) == F.lit(org + metric))
-            df = expand_items(df)
-            if src.compound_key:
-                df = split_compound_key(df, org, schema.timestamp_field)
-        df = _org_metric_filter(df, src, org, metric)
-        ts_col = F.col(schema.timestamp_field).cast("long")
-        if src.enforce_range and not src.time_range.is_unbounded:
-            df = df.filter(_range_condition(ts_col, src.time_range))
-        if src.kind == HISTORICAL and cutover is not None:
-            # anti-overlap: nearline wins the overlap window (O5)
-            df = df.filter(ts_col < F.lit(cutover))
-        df = _push_raw_ts_filters(df, src, ranges, cutover)
-        df = project_canonical(df, schema, src)
-        branches.append(df)
-
-    if branches:
-        out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), branches)
-    else:
+    out, live, cutover = _union_branches(spark, schema, sources, ranges, SourceSpec.read)
+    if out is None:
         out = empty_metric_df(spark, schema)
 
     if predicate:
@@ -298,12 +304,17 @@ def build_metric_df(
     # over-approximation that is always safe to apply alongside the predicate,
     # and REQUIRED when a time_range was passed (the predicate alone doesn't
     # carry it, and sources without raw_ts_col never re-expressed it).
-    rf = _ranges_filter(F.col(schema.timestamp_field), ranges)
-    if rf is not None:
-        out = out.filter(rf)
+    if not ranges.everything and ranges.ranges:
+        out = out.filter(_in_ranges(F.col(schema.timestamp_field), ranges.ranges))
     if sort:
         out = out.orderBy(schema.timestamp_field)
 
     if with_report:
+        report = BuildReport(
+            considered=[s.path for s in sources],
+            scanned=[s.path for s in live],
+            skipped=[s.path for s in sources if s not in live],
+            cutover=cutover,
+        )
         return out, report
     return out

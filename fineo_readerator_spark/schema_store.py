@@ -100,7 +100,7 @@ class MetricSchema:
     def known_stored_names(self) -> set[str]:
         """Every stored column name accounted for by the schema (used to
         decide what is 'unknown' and belongs in ``_fm``)."""
-        names: set[str] = set(INTERNAL_FIELDS)
+        names: set[str] = {*INTERNAL_FIELDS, self.timestamp_field}
         for f in self.fields:
             names.update(f.candidates)
         return names

@@ -184,6 +184,9 @@ class ReadServer:
         """Positive-int body param or ValueError with a client-facing message."""
         raw = body.get(key, default)
         try:
+            # int() would take a JSON true as 1 and truncate 2.9 to 2
+            if isinstance(raw, bool) or (isinstance(raw, float) and not raw.is_integer()):
+                raise ValueError
             val = int(raw)
         except (TypeError, ValueError):
             raise ValueError(f"invalid {key!r}: {raw!r} is not an integer") from None

@@ -154,38 +154,32 @@ class SourceSpec:
             )
         return df
 
+    def _reader(self, reader, **csv_options):
+        """Format, csv header and the spec's own options on a batch or stream
+        reader (the spec's options win)."""
+        if self.fmt == "csv":
+            reader = reader.options(header="true", **csv_options)
+        return reader.options(**self.options).format(self.fmt)
+
     def _read_raw(self, spark: SparkSession) -> DataFrame:
         """Batch read of the stored shape, before any derivations."""
         from fineo_readerator_spark.session import ensure_io_confs
 
         ensure_io_confs(spark)
-        reader = spark.read
-        if self.fmt == "csv":
-            reader = reader.option("header", "true").option("inferSchema", "true")
-        for k, v in self.options.items():
-            reader = reader.option(k, v)
-        return reader.format(self.fmt).load(self.path)
+        return self._reader(spark.read, inferSchema="true").load(self.path)
 
     def read(self, spark: SparkSession) -> DataFrame:
         return self._apply_derive(self._read_raw(spark))
 
     def read_stream(self, spark: SparkSession) -> DataFrame:
         """``readStream`` over the same source.  The declared schema is the
-        STORED shape (one driver-side metadata peek); derivations apply on
-        top of the stream, exactly as in batch — declaring the derived schema
-        instead would make the file reader return NULL for every derived
-        column, since those never exist in the files."""
+        STORED shape (one driver-side metadata peek, which also sets the I/O
+        confs); derivations apply on top of the stream, exactly as in batch —
+        declaring the derived schema instead would make the file reader return
+        NULL for every derived column, since those never exist in the files."""
         import os
 
-        from fineo_readerator_spark.session import ensure_io_confs
-
-        ensure_io_confs(spark)
         schema = self._read_raw(spark).schema
-        reader = spark.readStream.schema(schema)
-        if self.fmt == "csv":
-            reader = reader.option("header", "true")
-        for k, v in self.options.items():
-            reader = reader.option(k, v)
         # FileStreamSource forces basePath to the input path unless the path
         # is a glob, and requires basePath to be a directory — so a source
         # pointing at a single file (snapshot fixtures) streams via an
@@ -193,7 +187,7 @@ class SourceSpec:
         path = self.path
         if os.path.isfile(path):
             path = os.path.join(os.path.dirname(path), "{" + os.path.basename(path) + "}")
-        return self._apply_derive(reader.format(self.fmt).load(path))
+        return self._apply_derive(self._reader(spark.readStream.schema(schema)).load(path))
 
     def to_dict(self) -> dict:
         return {

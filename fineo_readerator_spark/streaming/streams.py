@@ -3,11 +3,11 @@
 The reference is a batch read layer over continuously-arriving time-series
 events (nearline DynamoDB windows + ETL'd historical files,
 `SubTableScanBuilder.java:44-112`); its "streaming" is re-querying.  The
-Spark-native upgrade is first-class Structured Streaming: the same canonical
-projection the batch recombinator applies (alias coalesce + casts + ``_fm``,
-`FineoRecombinatorRule.java:49-177`) composed over ``readStream``, with
-event-time watermarks for late data and stateful operators for what
-re-querying can't express.
+Spark-native upgrade is first-class Structured Streaming: the same
+recombinator build as batch (source selection, item expansion, cutover, alias
+coalesce + casts + ``_fm``, `FineoRecombinatorRule.java:49-177`) composed
+over ``readStream``, with event-time watermarks for late data and stateful
+operators for what re-querying can't express.
 
 Scale notes:
 - The canonical projection is stateless/narrow — it adds no shuffle to the
@@ -17,7 +17,8 @@ Scale notes:
 - ``stateful_running_totals`` keeps O(1) state per key (sum/count/max), not
   per-event state; keys are hash-partitioned across executors.
 - File-source streams list directories incrementally; at production scale the
-  same operators run unchanged on a Kafka source (swap ``read_source_stream``).
+  same operators run unchanged on a Kafka source (swap
+  ``SourceSpec.read_stream``).
 """
 
 from __future__ import annotations
@@ -31,44 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from fineo_readerator_spark.recombinator import project_canonical
+from fineo_readerator_spark.pruning import RangeSet
+from fineo_readerator_spark.recombinator import _union_branches
 from fineo_readerator_spark.schema_store import SchemaStore
 from fineo_readerator_spark.sources import SourceSpec
-
-
-def read_source_stream(spark: SparkSession, source: SourceSpec) -> DataFrame:
-    """``readStream`` over one file-backed source.
-
-    Streaming file sources need a declared schema; ``SourceSpec.read_stream``
-    takes it from the files already present (one driver-side metadata peek —
-    no data scan for parquet) and applies the storage-shape derivations on
-    top, same as batch.  New files only ever *add* columns in the reference's
-    model; late-added fields surface as NULL through the canonical
-    projection, same as batch (`TestClientLikeReads.java:193-260`)."""
-    return source.read_stream(spark)
-
-
-def read_metric_stream(
-    spark: SparkSession,
-    store: SchemaStore,
-    org: str,
-    metric: str,
-    source_idx: int = 0,
-    event_time_col: str = "event_time",
-) -> DataFrame:
-    """One metric table as a stream: canonical user-facing columns plus a
-    derived ``event_time`` TIMESTAMP (from the epoch-millis ``timestamp``)
-    ready for watermarking.  No final sort — ORDER BY is illegal on streams;
-    consumers window instead."""
-    schema = store.get_metric(org, metric)
-    source = store.get_sources(org, metric)[source_idx]
-    raw = read_source_stream(spark, source)
-    from fineo_readerator_spark.recombinator import _org_metric_filter
-
-    filtered = _org_metric_filter(raw, source, org, metric)
-    canon = project_canonical(filtered, schema, source)
-    ts = schema.timestamp_field
-    return canon.withColumn(event_time_col, F.timestamp_millis(F.col(ts)))
 
 
 def build_metric_stream(
@@ -78,66 +45,24 @@ def build_metric_stream(
     metric: str,
     event_time_col: str = "event_time",
 ) -> DataFrame:
-    """The FULL recombinator build over ``readStream`` — the streaming twin
-    of ``recombinator.build_metric_df`` minus the final sort (ORDER BY is
-    illegal on unbounded streams; consumers window instead).
-
-    Per live source: ``readStream`` → [KV item expansion / compound-key
-    split] → org/metric filter → source time-window enforcement →
-    anti-overlap cutover on historical (nearline wins the overlap,
-    `TestClientLikeReads.testReadAcrossOverlappingFileAndDynamo:91-113`) →
-    raw-timestamp filter twins (scan-prunable) → alias→canonical projection
-    with casts + ``_fm`` (`FineoRecombinatorRule.java:49-177`); then UNION
-    ALL across sources and a derived ``event_time`` TIMESTAMP ready for
-    watermarking.  Every step is stateless/narrow — the build adds no
-    streaming state; only downstream aggregations do."""
-    from functools import reduce
-
-    from fineo_readerator_spark.operators.expander import expand_items, split_compound_key
-    from fineo_readerator_spark.pruning import ranges_from_predicate, select_sources
-    from fineo_readerator_spark.recombinator import (
-        _org_metric_filter,
-        _push_raw_ts_filters,
-        _range_condition,
-    )
-    from fineo_readerator_spark.sources import HISTORICAL, NEARLINE_ITEMS
-
+    """One metric table as a stream: ``build_metric_df``'s recombinator build
+    over ``SourceSpec.read_stream``, plus a derived ``event_time`` TIMESTAMP
+    (from the epoch-millis ``timestamp``) ready for watermarking.  No final
+    sort — ORDER BY is illegal on unbounded streams; consumers window
+    instead.  Late-added fields read NULL, same as batch
+    (`TestClientLikeReads.java:193-260`); every build step is narrow, so only
+    downstream aggregations add streaming state."""
     schema = store.get_metric(org, metric)
     sources = store.get_sources(org, metric)
-    ranges = ranges_from_predicate(None, schema.timestamp_field)
-    live, cutover = select_sources(sources, ranges)
-
-    branches: list[DataFrame] = []
-    for src in live:
-        df = src.read_stream(spark)
-        if src.kind == NEARLINE_ITEMS:
-            if src.compound_key:
-                from fineo_readerator_spark.operators.expander import PARTITION_KEY
-
-                df = df.filter(F.col(PARTITION_KEY) == F.lit(org + metric))
-            df = expand_items(df)
-            if src.compound_key:
-                df = split_compound_key(df, org, schema.timestamp_field)
-        df = _org_metric_filter(df, src, org, metric)
-        ts_col = F.col(schema.timestamp_field).cast("long")
-        if src.enforce_range and not src.time_range.is_unbounded:
-            df = df.filter(_range_condition(ts_col, src.time_range))
-        if src.kind == HISTORICAL and cutover is not None:
-            df = df.filter(ts_col < F.lit(cutover))
-        df = _push_raw_ts_filters(df, src, ranges, cutover)
-        df = project_canonical(df, schema, src)
-        branches.append(df)
-
-    if not branches:
-        # the batch twin falls back to an empty DataFrame, but a STREAM needs
-        # at least one streaming source to exist — fail with the reason
+    out, _, _ = _union_branches(spark, schema, sources, RangeSet.all(), SourceSpec.read_stream)
+    if out is None:
+        # the batch build falls back to an empty DataFrame, but a STREAM
+        # needs at least one streaming source to exist — fail with the reason
         raise ValueError(
             f"no live sources for metric {org!r}.{metric!r}: register at least "
             "one source before reading it as a stream"
         )
-    out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), branches)
-    ts = schema.timestamp_field
-    return out.withColumn(event_time_col, F.timestamp_millis(F.col(ts)))
+    return out.withColumn(event_time_col, F.timestamp_millis(F.col(schema.timestamp_field)))
 
 
 def windowed_rollup(

@@ -16,7 +16,8 @@ A window is replayed sequentially in one session because a query's result
 can drift when it runs mid-window after 30+ other queries in the same JVM
 (cached relations, GC'd checkpoint blocks, accumulated session state):
 CORRECTNESS_r07 flagged q_skew_report hash-red while every standalone replay
-matched.  Exits 1 when any query is BAD.
+matched.  Exits 1 when any query is BAD, and before any Spark session
+starts when a named query is not in the registry.
 """
 import json
 import sys
@@ -52,6 +53,10 @@ def query_names(argv: list[str], qs: dict) -> list[str]:
         return [n for n in recorded if n in qs]
     if argv[:1] == ["--all"] or not argv:
         return list(qs)
+    unknown = [n for n in argv if n not in qs]
+    if unknown:
+        # a mistyped name must not read as "BAD: 0"
+        sys.exit(f"unknown query names: {unknown}")
     return [n for n in qs if n in argv]
 
 

@@ -338,3 +338,23 @@ def test_alias_column_not_duplicated_in_fm(spark, tmp_path):
     got = [r.asDict() for r in build_metric_df(spark, st, ORG, METRIC).collect()]
     assert got[0]["f_int"] == 5
     assert got[0]["_fm"] == {"unknown1": "u"}
+
+
+def test_custom_timestamp_field_not_in_fm(spark, tmp_path):
+    """A custom ``timestamp_field`` is a known stored column: it reads back
+    as the timestamp and must NOT also appear in _fm."""
+    path = _write(
+        spark, str(tmp_path / "hist"),
+        [{"companykey": ORG, "metrictype": METRIC, "ts_ms": 5, "f": "a", "extra": "x"}],
+        schema="companykey string, metrictype string, ts_ms long, f string, extra string",
+    )
+    st = SchemaStore()
+    st.register_metric(
+        MetricSchema(
+            org=ORG, metric=METRIC, fields=[FieldDef("f", "string")],
+            track_unknown=True, timestamp_field="ts_ms",
+        )
+    )
+    st.add_source(ORG, METRIC, SourceSpec(kind="historical", path=path))
+    got = [r.asDict() for r in build_metric_df(spark, st, ORG, METRIC).collect()]
+    assert got == [{"ts_ms": 5, "f": "a", "_fm": {"extra": "x"}}]

@@ -159,13 +159,17 @@ def test_statement_cap_evicts_oldest(spark, tmp_path):
 
 
 def test_bad_frame_size_is_client_error(server):
-    """Non-numeric / zero / negative frame_size or max_rows must come back
-    as a 400 JSON error, never a dropped connection (ADVICE r4)."""
-    for bad in ("nope", 0, -3, None):
+    """Non-numeric / boolean / fractional / zero / negative frame_size or
+    max_rows must come back as a 400 JSON error, never a dropped connection
+    (ADVICE r4) and never a silent int() coercion (true -> 1, 2.5 -> 2)."""
+    for bad in ("nope", 0, -3, None, True, 2.5):
         status, out = _post(server, {"sql": "SELECT 1", "frame_size": bad})
         assert status == 400 and "frame_size" in out["error"], (bad, out)
-    status, out = _post(server, {"sql": "SELECT 1", "max_rows": "many"})
-    assert status == 400 and "max_rows" in out["error"]
+    for bad in ("many", True):
+        status, out = _post(server, {"sql": "SELECT 1", "max_rows": bad})
+        assert status == 400 and "max_rows" in out["error"], (bad, out)
+    status, out = _post(server, {"sql": "SELECT 1", "max_rows": "2", "frame_size": 2})
+    assert status == 200 and len(out["rows"]) == 1, out
     # and on /fetch too, without killing the cursor's server
     status, first = _post(server, {"sql": "SELECT f_int FROM metricA", "frame_size": 1})
     stmt = first["statement_id"]

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from fineo_readerator_spark.schema_store import FieldDef, MetricSchema, SchemaStore
 from fineo_readerator_spark.sources import SourceSpec, TimeRange
 from fineo_readerator_spark.streaming import (
-    read_metric_stream,
+    build_metric_stream,
     run_available_now,
     sessionize,
     stateful_running_totals,
@@ -70,7 +70,7 @@ def stream_store(spark, tmp_path):
 
 def test_metric_stream_canonical_projection(spark, stream_store):
     store, src_dir = stream_store
-    stream = read_metric_stream(spark, store, "org1", "m1")
+    stream = build_metric_stream(spark, store, "org1", "m1")
     q = run_available_now(stream, "canon_stream")
     try:
         out = spark.sql("SELECT * FROM canon_stream").collect()
@@ -87,7 +87,7 @@ def test_windowed_rollup_matches_batch(spark, stream_store, tmp_path):
     store, src_dir = stream_store
     _write_events(spark, src_dir, _event_rows(1))  # second arrival batch
 
-    stream = read_metric_stream(spark, store, "org1", "m1")
+    stream = build_metric_stream(spark, store, "org1", "m1")
     rolled = windowed_rollup(
         stream,
         "event_time",
@@ -122,7 +122,7 @@ def test_windowed_rollup_matches_batch(spark, stream_store, tmp_path):
 
 def test_sessionize_gap_semantics(spark, stream_store):
     store, _ = stream_store
-    stream = read_metric_stream(spark, store, "org1", "m1")
+    stream = build_metric_stream(spark, store, "org1", "m1")
     sessions = sessionize(stream, "event_time", keys=["user"], gap="30 seconds")
     q = run_available_now(sessions, "session_stream", output_mode="complete")
     try:
@@ -144,7 +144,7 @@ def test_sessionize_gap_semantics(spark, stream_store):
 def test_stateful_running_totals_across_batches(spark, stream_store):
     store, src_dir = stream_store
     _write_events(spark, src_dir, _event_rows(1))
-    stream = read_metric_stream(spark, store, "org1", "m1")
+    stream = build_metric_stream(spark, store, "org1", "m1")
     totals = stateful_running_totals(stream, "user", "value")
     q = run_available_now(totals, "totals_stream", output_mode="update")
     try:
@@ -161,7 +161,7 @@ def test_stream_parquet_sink_roundtrip(spark, stream_store, tmp_path):
     from fineo_readerator_spark.streaming import write_stream_parquet
 
     store, _ = stream_store
-    stream = read_metric_stream(spark, store, "org1", "m1")
+    stream = build_metric_stream(spark, store, "org1", "m1")
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = write_stream_parquet(stream.drop("event_time"), out_dir, ckpt, available_now=True)
     q.awaitTermination()
@@ -194,7 +194,7 @@ def test_watermark_drops_late_rows_in_append(spark, tmp_path):
     out_dir, ckpt = str(tmp_path / "late_out"), str(tmp_path / "ckpt")
 
     def drain():
-        stream = read_metric_stream(spark, store, "org1", "m1")
+        stream = build_metric_stream(spark, store, "org1", "m1")
         rolled = windowed_rollup(
             stream, "event_time", keys=["user"], aggs={"n": "count(*)"},
             window="1 minute", watermark="10 minutes",
@@ -235,7 +235,7 @@ def test_stream_checkpoint_recovery_exactly_once(spark, stream_store, tmp_path):
     from fineo_readerator_spark.streaming import write_stream_parquet
 
     store, src_dir = stream_store
-    stream = read_metric_stream(spark, store, "org1", "m1")
+    stream = build_metric_stream(spark, store, "org1", "m1")
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = write_stream_parquet(stream.drop("event_time"), out_dir, ckpt, available_now=True)
     q.awaitTermination()
@@ -245,7 +245,7 @@ def test_stream_checkpoint_recovery_exactly_once(spark, stream_store, tmp_path):
     _write_events(spark, src_dir, _event_rows(1))
 
     # restart with a fresh plan object but the same checkpoint
-    stream2 = read_metric_stream(spark, store, "org1", "m1")
+    stream2 = build_metric_stream(spark, store, "org1", "m1")
     q2 = write_stream_parquet(stream2.drop("event_time"), out_dir, ckpt, available_now=True)
     q2.awaitTermination()
     back = spark.read.parquet(out_dir)
@@ -261,7 +261,7 @@ def test_dedup_stream_drops_duplicate_keys(spark, stream_store, tmp_path):
     store, src_dir = stream_store
     # re-append batch 0: every event_id now arrives twice
     _write_events(spark, src_dir, _event_rows(0))
-    stream = read_metric_stream(spark, store, "org1", "m1")
+    stream = build_metric_stream(spark, store, "org1", "m1")
     deduped = dedup_stream(stream, ["event_id"]) if "event_id" in stream.columns else None
     if deduped is None:  # schema has no event_id; dedup on (user, timestamp)
         deduped = dedup_stream(stream, ["user", "timestamp"])
@@ -275,22 +275,11 @@ def test_dedup_stream_drops_duplicate_keys(spark, stream_store, tmp_path):
     assert sorted(r.value for r in out) == [5.0, 7.0, 10.0]
 
 
-def test_build_metric_stream_matches_batch_build(spark, sf_dir):
-    """Streaming/batch parity for the FULL recombinator build: the split
-    two-store metric (alias-coalesced historical + nearline cutover) drained
-    as a stream must equal build_metric_df over the same store row-for-row."""
-    from fineo_readerator_spark.plans.streaming_queries import st_metric_build
-    from fineo_readerator_spark.plans.metric_queries import (
-        CUTOVER_MS,
-        EVENT_DERIVE,
-        METRIC,
-        ORG,
-    )
-    from fineo_readerator_spark.recombinator import build_metric_df
-    from fineo_readerator_spark.schema_store import FieldDef, MetricSchema, SchemaStore
-    from fineo_readerator_spark.sources import SourceSpec, TimeRange
-
-    streamed = st_metric_build(spark, sf_dir)
+def _split_alias_store(spark, sf_dir, tmp_path):
+    """Historical (value stored only under ``val_alias``) + nearline owning
+    [CUTOVER_MS, ∞), both over the same events file: alias coalesce and the
+    anti-overlap cutover."""
+    from fineo_readerator_spark.plans.metric_queries import CUTOVER_MS, EVENT_DERIVE, METRIC, ORG
 
     fields = [
         FieldDef("event_id", "long"),
@@ -315,22 +304,76 @@ def test_build_metric_stream_matches_batch_build(spark, sf_dir):
             time_range=TimeRange(CUTOVER_MS, None),
         ),
     )
-    batch = build_metric_df(spark, st, ORG, METRIC, sort=False).select(
-        "timestamp", "event_id", "user_id", "event_type", "value"
+    return st, ORG, METRIC
+
+
+def _events_store(spark, sf_dir, tmp_path):
+    """The one-source historical store every metric-stream registry query
+    reads."""
+    from fineo_readerator_spark.plans.metric_queries import METRIC, ORG, events_store
+
+    return events_store(sf_dir), ORG, METRIC
+
+
+def _items_store(spark, sf_dir, tmp_path):
+    """A compound-key ``nearline_items`` store (one row per write id after
+    expansion), with another tenant's item and an item outside the source
+    window that the build must drop."""
+    path = str(tmp_path / "items")
+    rows = [
+        ("org1metricA", 100, ["w1", "w2"], {"w1": 1, "w2": 2}, {"w1": "a", "w2": "b"}),
+        ("org1metricA", 200, ["w3"], {"w3": 3}, {"w3": "c"}),
+        ("org1metricA", 900, ["w4"], {"w4": 4}, {"w4": "d"}),
+        ("org2metricA", 150, ["w5"], {"w5": 5}, {"w5": "e"}),
+    ]
+    schema = (
+        "partition_key string, sort_key long, ids array<string>,"
+        "f_int map<string,int>, f_string map<string,string>"
     )
-    got = sorted(map(tuple, streamed.collect()))
-    exp = sorted(map(tuple, batch.collect()))
-    assert len(got) == batch.count() and got == exp
-    # aliased values were recovered on the historical side of the cutover
-    assert all(v is not None for *_, v in got)
+    spark.createDataFrame(rows, schema=schema).coalesce(1).write.parquet(path)
+    st = SchemaStore()
+    st.register_metric(
+        MetricSchema(
+            org="org1", metric="metricA",
+            fields=[FieldDef("f_int", "int"), FieldDef("f_string", "string")],
+        )
+    )
+    st.add_source(
+        "org1", "metricA",
+        SourceSpec(kind="nearline_items", path=path, compound_key=True, time_range=TimeRange(50, 500)),
+    )
+    return st, "org1", "metricA"
+
+
+@pytest.mark.parametrize(
+    "make_store", [_split_alias_store, _events_store, _items_store], ids=["split_alias", "events", "items"]
+)
+def test_build_metric_stream_matches_batch_build(spark, sf_dir, tmp_path, make_store):
+    """Streaming/batch parity for the FULL recombinator build over every
+    source shape: the stream drained available-now must equal
+    build_metric_df over the same store row-for-row."""
+    from fineo_readerator_spark.recombinator import build_metric_df
+
+    st, org, metric = make_store(spark, sf_dir, tmp_path)
+    batch = build_metric_df(spark, st, org, metric, sort=False)
+    sink = "parity" + make_store.__name__
+    q = run_available_now(build_metric_stream(spark, st, org, metric).select(*batch.columns), sink)
+    try:
+        got = spark.sql(f"SELECT * FROM {sink}").collect()
+    finally:
+        q.stop()
+    exp = batch.collect()
+    assert got and sorted(map(tuple, got), key=repr) == sorted(map(tuple, exp), key=repr)
+    if make_store is _split_alias_store:
+        # aliased values were recovered on the historical side of the cutover
+        assert all(r.value is not None for r in got)
+    if make_store is _items_store:
+        assert sorted((r.timestamp, r.f_int, r.f_string) for r in got) == [
+            (100, 1, "a"), (100, 2, "b"), (200, 3, "c"),
+        ]
 
 
 def test_build_metric_stream_no_sources_is_clear_error(spark):
-    import pytest
-
-    from fineo_readerator_spark.schema_store import FieldDef, MetricSchema, SchemaStore
-    from fineo_readerator_spark.streaming import build_metric_stream
-
     st = SchemaStore()
     st.register_metric(
         MetricSchema(org="o", metric="m", fields=[FieldDef("v", "int")])

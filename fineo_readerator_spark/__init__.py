@@ -14,8 +14,8 @@ Architecture (Spark-first, not a port):
                      cutover, unionByName, final timestamp sort
                      (reference: recombinator/logical/FineoRecombinatorRule.java,
                       recombinator/physical/batch/RecombinatorRecordBatch.java)
-- ``pruning``        timestamp-range extraction from predicates and source
-                     selection (reference: partition/TimestampExpressionBuilder.java,
+- ``pruning``        timestamp ranges from Spark's parse of predicates, and
+                     source selection (reference: partition/TimestampExpressionBuilder.java,
                       ConvertFineoMarkerIntoFilteredInputTables.java)
 - ``operators``      nearline item expansion (reference: DynamoExpanderBatch.java)
 - ``catalog`` / ``api``  tenant-scoped views, INFORMATION_SCHEMA parity, errors

@@ -1,11 +1,11 @@
 """Timestamp-range extraction and source selection.
 
-Reimplements the reference's resolve-time pruning stack as plain Python over a
-tiny predicate AST instead of planner rules:
+Reimplements the reference's resolve-time pruning stack on the driver:
 
-- `TimestampExpressionBuilder.java:37-141` — extract ``=,<,<=,>,>=,BETWEEN``
-  conditions on ``timestamp`` from an AND/OR tree into include-ranges;
-  anything else (``<>``, arithmetic, other columns) degrades to scan-all.
+- `TimestampExpressionBuilder.java:37-141` — walk the predicate as Spark's
+  own SQL parser parses it and turn ``=,<,<=,>,>=,IN,BETWEEN`` conditions on
+  ``timestamp`` under AND/OR into include-ranges; anything else (``NOT``,
+  ``<>``, other columns) degrades to scan-all.
 - `ConvertFineoMarkerIntoFilteredInputTables.java:183-326` (O3/O4) — per
   source, decide scan/skip by intersecting the query range with the source's
   declared window.
@@ -14,41 +14,20 @@ tiny predicate AST instead of planner rules:
   ``timestamp < min(nearline.start)`` — overlap resolution is range-based,
   nearline wins; NOT row-level dedup.
 
-In Spark the *intra*-source pruning (files, partitions, row groups) is native
-once the timestamp filter is part of the plan; this module only decides which
-sources enter the union at all — metadata-only work on the driver, O(#sources),
-independent of data volume.
+This module only decides which sources enter the union at all: metadata-only
+work on the driver, O(#sources).  Skipping inside a source is the scan's job.
 """
 
 from __future__ import annotations
 
-import re
 from typing import Optional
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
+from pyspark.sql import SparkSession
+
+from fineo_readerator_spark.session import get_spark
 from fineo_readerator_spark.sources import HISTORICAL, NEARLINE, NEARLINE_ITEMS, SourceSpec, TimeRange
-
-_TOKEN = re.compile(
-    r"""\s*(?:
-        (?P<lparen>\()
-      | (?P<rparen>\))
-      | (?P<op><=|>=|<>|!=|=|<|>)
-      | (?P<num>\d+)
-      | (?P<str>'[^']*')
-      | (?P<word>[A-Za-z_][A-Za-z0-9_.]*)
-    )""",
-    re.VERBOSE,
-)
-
-
-def _tokenize(text: str) -> list[str]:
-    tokens, pos = [], 0
-    while pos < len(text):
-        m = _TOKEN.match(text, pos)
-        if not m:
-            raise ValueError(f"cannot tokenize predicate at: {text[pos:pos+20]!r}")
-        tokens.append(m.group().strip())
-        pos = m.end()
-    return tokens
 
 
 class RangeSet:
@@ -90,113 +69,85 @@ class RangeSet:
         return any(r.overlaps(window) for r in self.ranges)
 
 
-class _Parser:
-    """Recursive-descent parser for the reference's supported predicate shape:
-    comparisons joined by AND/OR with parentheses (SURVEY §2.7).  Only
-    ``timestamp <op> <int>`` leaves contribute range information; every other
-    leaf is range-neutral (matches TimestampExpressionBuilder's scan-all
-    degradation for unsupported expressions)."""
+# comparison -> (its mirror, for ``v <op> timestamp``; range of ``timestamp <op> v``)
+_COMPARISONS = {
+    "EqualTo": ("EqualTo", lambda v: TimeRange(v, v + 1)),
+    "LessThan": ("GreaterThan", lambda v: TimeRange(None, v)),
+    "LessThanOrEqual": ("GreaterThanOrEqual", lambda v: TimeRange(None, v + 1)),
+    "GreaterThan": ("LessThan", lambda v: TimeRange(v + 1, None)),
+    "GreaterThanOrEqual": ("LessThanOrEqual", lambda v: TimeRange(v, None)),
+}
+_INTEGRAL = ("byte", "short", "integer", "long")
 
-    def __init__(self, tokens: list[str], ts_field: str):
-        self.tokens = tokens
-        self.pos = 0
-        self.ts_field = ts_field
 
-    def peek(self) -> Optional[str]:
-        return self.tokens[self.pos] if self.pos < len(self.tokens) else None
+def _bound(expr) -> Optional[int]:
+    """A constant integral operand (``5``, ``1000*60``) folded to an int ≥ 0, else None.
+    Negative bounds prune nothing: the raw-``ts`` twins are exact only for epochs ≥ 0."""
+    try:
+        if not expr.foldable() or expr.dataType().typeName() not in _INTEGRAL:
+            return None
+        v = expr.eval(None)
+    except (Py4JError, PySparkException):  # e.g. ANSI overflow while folding
+        return None
+    return v if type(v) is int and v >= 0 else None
 
-    def next(self) -> str:
-        tok = self.tokens[self.pos]
-        self.pos += 1
-        return tok
 
-    def parse(self) -> RangeSet:
-        out = self.parse_or()
-        if self.peek() is not None:
-            raise ValueError(f"trailing tokens: {self.tokens[self.pos:]}")
-        return out
+def ranges_from_expression(expr, ts_field: str = "timestamp") -> RangeSet:
+    """The timestamp include-ranges of a *parsed* Catalyst ``Expression`` (a py4j
+    handle, e.g. a ``Filter`` condition of ``parsePlan(sql)``), from ``And``,
+    ``Or``, the five comparisons, ``IN`` and ``BETWEEN`` (the parsed function
+    ``between``) of the bare timestamp column against constants; anything
+    else is scan-all.  Parsed, not analyzed: analysis turns ``BETWEEN`` into
+    a ``With`` tree and casts ``IN``'s column.  Each node call is a py4j round
+    trip: 3 per ``And``/``Or``, 11-12 per timestamp comparison."""
 
-    def parse_or(self) -> RangeSet:
-        left = self.parse_and()
-        while self.peek() is not None and self.peek().upper() == "OR":
-            self.next()
-            left = left.union(self.parse_and())
-        return left
+    def is_ts(e) -> bool:
+        return (
+            e.nodeName() == "UnresolvedAttribute"
+            and e.name().lower() == ts_field.lower()
+            and e.nameParts().size() == 1
+        )
 
-    def parse_and(self) -> RangeSet:
-        left = self.parse_atom()
-        while self.peek() is not None and self.peek().upper() == "AND":
-            self.next()
-            left = left.intersect(self.parse_atom())
-        return left
-
-    def parse_atom(self) -> RangeSet:
-        tok = self.peek()
-        if tok == "(":
-            self.next()
-            inner = self.parse_or()
-            if self.next() != ")":
-                raise ValueError("unbalanced parens")
-            return inner
-        return self.parse_leaf()
-
-    def parse_leaf(self) -> RangeSet:
-        lhs = self.next()
-        nxt = self.peek()
-        if nxt is not None and nxt.upper() == "BETWEEN":
-            # col BETWEEN a AND b
-            self.next()
-            lo = self.next()
-            if self.next().upper() != "AND":
-                raise ValueError("BETWEEN without AND")
-            hi = self.next()
-            if lhs == self.ts_field and lo.isdigit() and hi.isdigit():
-                return RangeSet.of(TimeRange(int(lo), int(hi) + 1))
-            return RangeSet.all()
-        if nxt is not None and nxt.upper() == "IS":
-            # IS [NOT] NULL / IS TRUE — range-neutral
-            self.next()
-            if self.peek() is not None and self.peek().upper() == "NOT":
-                self.next()
-            self.next()  # NULL / TRUE / FALSE
-            return RangeSet.all()
-        if nxt in ("=", "<", "<=", ">", ">=", "<>", "!="):
-            op = self.next()
-            rhs = self.next()
-            val, col = None, None
-            if lhs == self.ts_field and rhs.isdigit():
-                col, val = lhs, int(rhs)
-            elif rhs == self.ts_field and lhs.isdigit():
-                # literal <op> timestamp — mirror the op
-                col, val = rhs, int(lhs)
-                op = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op, op)
-            if col is None:
+    node = expr.nodeName()
+    if node in ("And", "Or"):
+        left = ranges_from_expression(expr.left(), ts_field)
+        right = ranges_from_expression(expr.right(), ts_field)
+        return left.intersect(right) if node == "And" else left.union(right)
+    if node in _COMPARISONS:
+        col, operand = expr.left(), expr.right()
+        if not is_ts(col):  # ``v <op> timestamp``: mirror it
+            col, operand, node = operand, col, _COMPARISONS[node][0]
+            if not is_ts(col):
                 return RangeSet.all()
-            if op == "=":
-                return RangeSet.of(TimeRange(val, val + 1))
-            if op == "<":
-                return RangeSet.of(TimeRange(None, val))
-            if op == "<=":
-                return RangeSet.of(TimeRange(None, val + 1))
-            if op == ">":
-                return RangeSet.of(TimeRange(val + 1, None))
-            if op == ">=":
-                return RangeSet.of(TimeRange(val, None))
-            return RangeSet.all()  # <> / != → scan-all (TimestampExpressionBuilder)
-        # bare identifier / unknown shape — range-neutral
-        return RangeSet.all()
+        v = _bound(operand)
+        return RangeSet.all() if v is None else RangeSet.of(_COMPARISONS[node][1](v))
+    if node == "In" and is_ts(expr.value()):
+        items = expr.list()
+        vals = [_bound(items.apply(i)) for i in range(items.size())]
+        if None not in vals:
+            return RangeSet([TimeRange(v, v + 1) for v in vals])
+    if node == "UnresolvedFunction" and expr.prettyName() == "between":
+        args = expr.arguments()
+        if args.size() == 3 and is_ts(args.apply(0)):
+            lo, hi = _bound(args.apply(1)), _bound(args.apply(2))
+            if lo is not None and hi is not None:
+                return RangeSet.of(TimeRange(lo, hi + 1))
+    return RangeSet.all()
 
 
-def ranges_from_predicate(predicate: Optional[str], ts_field: str = "timestamp") -> RangeSet:
-    """Extract the timestamp include-range set from a SQL-ish predicate string.
-
-    Unparseable or absent predicates → scan-all (O4 semantics)."""
+def ranges_from_predicate(
+    predicate: Optional[str], ts_field: str = "timestamp", spark: Optional[SparkSession] = None
+) -> RangeSet:
+    """The ranges of a SQL predicate parsed by ``spark`` (default: the active
+    session, else ``get_spark()``); unparseable or absent → scan-all (O4)."""
     if not predicate or not predicate.strip():
         return RangeSet.all()
+    spark = spark or SparkSession.getActiveSession() or get_spark()
     try:
-        return _Parser(_tokenize(predicate), ts_field).parse()
-    except (ValueError, IndexError):
+        expr = spark._jsparkSession.sessionState().sqlParser().parseExpression(predicate)
+    except (Py4JError, PySparkException):
         return RangeSet.all()
+    return ranges_from_expression(expr, ts_field)
 
 
 def select_sources(

@@ -172,19 +172,20 @@ def _push_raw_ts_filters(
 
     A predicate on the derived epoch-millis column evaluates after the scan;
     the equivalent bound on the raw column reaches the parquet reader as a
-    pushed filter and skips row groups by min/max stats.  The bound literal
-    adapts to the raw column's ACTUAL dtype:
+    pushed filter.  That skips row groups by min/max stats on integer and
+    UTC-adjusted timestamp columns, not on ``TIMESTAMP_NTZ`` ones (every
+    ``events`` fixture).  The bound literal adapts to the raw column's dtype:
 
     - integer raw units: ``raw >= start*N`` / ``raw < end*N`` (exact for
       integer division of non-negative epochs);
     - timestamp[us]/timestamp_ntz: ``raw >= timestamp_micros(start*1000)``
       cast to the column's exact type — constant-folded to a plain literal
-      before pushdown, so row-group skipping still applies.  Comparing a
-      scaled ``cast(raw as long)`` here instead would silently compare epoch
-      SECONDS against nanos-scaled bounds (wrong by 1e9).
+      before pushdown.  Comparing a scaled ``cast(raw as long)`` here instead
+      would silently compare epoch SECONDS against nanos-scaled bounds (wrong
+      by 1e9).
 
     The derived-column filters stay too (they are the semantic truth); these
-    raw twins exist purely so the scan can prune."""
+    raw twins exist only so the scan can skip."""
     if not src.raw_ts_col or src.raw_ts_col not in df.columns:
         return df
     dtype = df.schema[src.raw_ts_col].dataType
@@ -290,7 +291,7 @@ def build_metric_df(
     schema = store.get_metric(org, metric)
     sources = store.get_sources(org, metric)
 
-    ranges = ranges_from_predicate(predicate, schema.timestamp_field)
+    ranges = ranges_from_predicate(predicate, schema.timestamp_field, spark)
     if time_range is not None:
         ranges = ranges.intersect(RangeSet.of(time_range))
 

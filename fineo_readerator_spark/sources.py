@@ -118,9 +118,9 @@ class SourceSpec:
     # When the metric timestamp is derived from a stored column by integer
     # division (raw units per millisecond), declare it here: time-range
     # filters are then re-expressed on the RAW column so they push into the
-    # parquet scan (row-group min/max skipping).  A filter on the derived
-    # `raw div N` expression is NOT pushable — at 100 TB that difference is
-    # reading every row group vs skipping most of them.
+    # parquet scan, which skips row groups by min/max on integer and
+    # UTC-adjusted timestamp columns but not on TIMESTAMP_NTZ ones.  A filter
+    # on the derived `raw div N` expression is NOT pushable at all.
     raw_ts_col: Optional[str] = None
     raw_ts_per_milli: int = 1
 

@@ -167,7 +167,7 @@ def stateful_running_totals(
         state.update((cnt, total, vmax))
         yield pd.DataFrame(
             [{"key": key[0], "cnt": cnt, "total": total, "vmax": vmax}]
-        )
+        ).astype({"vmax": "float64"})  # None → NaN → NULL, never an object column
 
     return df.groupBy(F.col(key_col)).applyInPandasWithState(
         update, _RUNNING_OUT, _RUNNING_STATE, "update", timeout

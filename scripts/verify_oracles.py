@@ -18,13 +18,20 @@ can drift when it runs mid-window after 30+ other queries in the same JVM
 CORRECTNESS_r07 flagged q_skew_report hash-red while every standalone replay
 matched.  Exits 1 when any query is BAD, and before any Spark session
 starts when a named query is not in the registry.
+
+Every MATCH and rows-only verdict ends with ``digest=``: perfbench's
+``ops.registry_digest`` of the sorted rows and the column names.  A
+byte-identity check between two trees is then two runs and a ``diff`` of
+the verdicts with the timings cut out.
 """
 import json
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(1, str(ROOT / "perfbench"))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -33,6 +40,7 @@ from fineo_readerator_spark.oracle_compare import (  # noqa: E402
     container_columns,
     kind_mismatches,
 )
+from ops import registry_digest  # noqa: E402  (perfbench's result digest)
 
 WINDOW = 50
 
@@ -75,8 +83,9 @@ def check(spark, con, name: str, fn, oracle: str | None, sf: str) -> tuple[bool,
     except Exception as e:  # noqa: BLE001 — report and keep checking
         return True, f"SPARK-ERROR {type(e).__name__}: {str(e)[:200]}"
     dt = time.time() - t0
+    digest = registry_digest(scols, got)
     if oracle is None:
-        return False, f"rows-only ({len(got)} rows, {dt:.1f}s)"
+        return False, f"rows-only ({len(got)} rows, {dt:.1f}s) digest={digest}"
     try:
         rel = con.sql(oracle)
         dcols, dtypes = list(rel.columns), list(rel.types)
@@ -93,7 +102,7 @@ def check(spark, con, name: str, fn, oracle: str | None, sf: str) -> tuple[bool,
     idx = [dcols.index(c) for c in scols]
     exp = sorted(tuple(str(r[i]) for i in idx) for r in rows)
     if got == exp:
-        return False, f"MATCH ({len(got)} rows, {dt:.1f}s)"
+        return False, f"MATCH ({len(got)} rows, {dt:.1f}s) digest={digest}"
     diff = [(g, e) for g, e in zip(got, exp) if g != e][:2]
     return True, f"MISMATCH rows {len(got)} vs {len(exp)} first-diff={diff}"
 

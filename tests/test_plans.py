@@ -20,6 +20,8 @@ from fineo_readerator_spark.plans.metric_queries import (
     events_store,
 )
 from fineo_readerator_spark.recombinator import build_metric_df
+from fineo_readerator_spark.schema_store import FieldDef, MetricSchema, SchemaStore
+from fineo_readerator_spark.sources import SourceSpec
 
 
 def _plan(df) -> str:
@@ -40,15 +42,65 @@ def _ts_lit(ms: int) -> str:
 
 def test_raw_ts_bounds_reach_the_scan(spark, sf_dir):
     """Time-range predicates on the derived epoch-millis timestamp must appear
-    as raw-column bounds in PushedFilters — this is what turns the filter
-    into row-group skipping at scale.  With timestamp[us] fixtures the bound
-    is a timestamp literal (a scaled long here would be the seconds-vs-nanos
-    bug VERDICT r3 #2 warned about)."""
+    as raw-column bounds in PushedFilters.  With timestamp[us] fixtures the
+    bound is a timestamp literal (a scaled long here would be the
+    seconds-vs-nanos bug VERDICT r3 #2 warned about).  On these NTZ fixtures
+    the pushed bound skips no row group; which shapes do skip is
+    ``test_raw_ts_bounds_skip_row_groups_by_shape``."""
     pred = f"timestamp >= {T_LO} AND timestamp < {T_HI}"
     df = build_metric_df(spark, events_store(sf_dir), ORG, METRIC, predicate=pred, sort=False)
     pushed = " | ".join(_pushed(_plan(df)))
     assert f"GreaterThanOrEqual(ts,{_ts_lit(T_LO)}" in pushed
     assert f"LessThan(ts,{_ts_lit(T_HI)}" in pushed
+
+
+def _scan_rows(df) -> int:
+    """Rows the executed plan's file scans output: with parquet's record-level
+    filter off (the default) this counts every row of every row group read."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size()) if "Scan" in leaves.apply(i).nodeName()]
+    return sum(s.metrics().apply("numOutputRows").value() for s in scans)
+
+
+@pytest.mark.parametrize("raw_col, skips", [("ts_micros", True), ("ts_utc", True), ("ts_ntz", False)])
+def test_raw_ts_bounds_skip_row_groups_by_shape(spark, tmp_path, raw_col, skips):
+    """Which raw timestamp shapes let the pushed raw-``ts`` bound skip parquet
+    row groups, over a file sorted by time in 10 row groups of 1,000 rows.
+
+    An int64 epoch-micros column and a UTC-adjusted ``TIMESTAMP(MICROS)``
+    column read fewer rows than the file holds.  A ``TIMESTAMP(MICROS)``
+    column that is not UTC-adjusted (read as ``TIMESTAMP_NTZ``, the shape of
+    every ``events`` fixture) keeps the bound in PushedFilters but reads
+    every row; for it only the answer is checked."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n, t0_ms = 10_000, 1_704_067_200_000
+    micros = pa.array([(t0_ms + i * 60_000) * 1000 for i in range(n)], pa.int64())
+    table = pa.table(
+        {
+            "ts_micros": micros,
+            "ts_utc": micros.cast(pa.timestamp("us", tz="UTC")),
+            "ts_ntz": micros.cast(pa.timestamp("us")),
+            "value": pa.array([float(i) for i in range(n)]),
+        }
+    )
+    path = str(tmp_path / "sorted.parquet")
+    pq.write_table(table, path, row_group_size=1_000)
+    st = SchemaStore()
+    st.register_metric(MetricSchema(org=ORG, metric=METRIC, fields=[FieldDef("value", "double")]))
+    derive = {"timestamp": f"epoch_ms({raw_col})", "companykey": f"'{ORG}'", "metrictype": f"'{METRIC}'"}
+    src = SourceSpec(kind="historical", path=path, derive=derive, raw_ts_col=raw_col, raw_ts_per_milli=1000)
+    st.add_source(ORG, METRIC, src)
+    lo, hi = t0_ms + 4_500 * 60_000, t0_ms + 5_200 * 60_000  # rows 4500-5199
+    pred = f"timestamp >= {lo} AND timestamp < {hi}"
+    df = build_metric_df(spark, st, ORG, METRIC, predicate=pred, sort=False).select("value")
+    assert sorted(r.value for r in df.collect()) == [float(i) for i in range(4_500, 5_200)]
+    if skips:
+        assert _scan_rows(df) < n
 
 
 def test_cutover_pushes_to_historical_scan(spark, sf_dir):

@@ -83,3 +83,25 @@ def test_union_pruned_scans_one_source(spark, sf_dir):
     _, report = build_metric_df(spark, st, ORG, METRIC, predicate=pred, with_report=True)
     assert len(report.scanned) == 1, f"expected historical pruned, scanned={report.scanned}"
     assert report.skipped and "events.parquet" in report.skipped[0]
+
+
+def test_spark_parse_shapes_prune_and_unsupported_degrade():
+    """Spelling the hand-written parser missed now prunes, because the ranges
+    come from Spark's own parse; every shape the walk cannot bound soundly
+    (NOT, decimal/string/NULL constants, negative or overflowing bounds,
+    qualified names, a syntax error) stays scan-all."""
+    assert r("TIMESTAMP >= 5").ranges == [TimeRange(5, None)]
+    assert r("timestamp IN (1, 7)").ranges == [TimeRange(1, 2), TimeRange(7, 8)]
+    assert r("timestamp >= 1000*60").ranges == [TimeRange(60_000, None)]
+    assert r("`timestamp` < 5").ranges == [TimeRange(None, 5)]
+    for pred in [
+        "NOT (timestamp < 5)",
+        "timestamp >= 5.5",
+        "timestamp >= -5",
+        "timestamp = NULL",
+        "timestamp >= '100'",
+        "events.timestamp > 3",
+        "timestamp >= 9223372036854775807 * 2",
+        "timestamp > (",
+    ]:
+        assert r(pred).everything, pred

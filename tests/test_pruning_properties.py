@@ -56,14 +56,27 @@ predicates = st.recursive(
 
 def to_sql(node) -> str:
     k = node["kind"]
+    col = node.get("col", TS)
     if k == "ts":
-        return f"{TS} {node['op']} {node['val']}"
+        return f"{col} {node['op']} {const_sql(node, node['val'])}"
     if k == "between":
-        return f"{TS} BETWEEN {node['lo']} AND {node['hi']}"
+        return f"{col} BETWEEN {const_sql(node, node['lo'])} AND {const_sql(node, node['hi'])}"
+    if k == "in":
+        return f"{col} IN ({', '.join(const_sql(node, v) for v in node['vals'])})"
+    if k == "not":
+        return f"NOT ({to_sql(node['x'])})"
     if k == "other":
         return "event_type = 'x'"
     op = "AND" if k == "and" else "OR"
     return f"({to_sql(node['l'])} {op} {to_sql(node['r'])})"
+
+
+def const_sql(node, v: int) -> str:
+    """``v`` as a literal, or as a constant product when the leaf asks for one."""
+    if not node.get("product"):
+        return str(v)
+    a = next((d for d in range(2, v) if v % d == 0), 1)
+    return f"{a}*{v // a}"
 
 
 def could_match(node, ts: int) -> bool:
@@ -78,6 +91,11 @@ def could_match(node, ts: int) -> bool:
         }[op]
     if k == "between":
         return node["lo"] <= ts <= node["hi"]
+    if k == "in":
+        return ts in node["vals"]
+    if k == "not":
+        # wraps only timestamp leaves, whose truth at ts is exact
+        return not could_match(node["x"], ts)
     if k == "other":
         return True
     if k == "and":
@@ -123,6 +141,43 @@ def test_source_selection_is_sound(ast):
         )
         if holds:
             assert f"s{i}" in live_paths, f"source {i} holds matching rows but was pruned; sql={sql!r}"
+
+
+# --- the shapes Spark's parser adds: IN, NOT, spellings, constant products --
+
+spellings = st.sampled_from([TS, TS.upper(), f"`{TS}`", TS.capitalize()])
+spelled_leaves = st.one_of(
+    st.tuples(comparison, spellings, st.booleans()).map(
+        lambda t: {**leaf_ts(t[0]), "col": t[1], "product": t[2]}
+    ),
+    st.tuples(st.lists(st.integers(0, 20), min_size=1, max_size=4), spellings, st.booleans()).map(
+        lambda t: {"kind": "in", "vals": t[0], "col": t[1], "product": t[2]}
+    ),
+    st.tuples(st.integers(0, 20), st.integers(0, 20), spellings).map(
+        lambda t: {**leaf_between(t[:2]), "col": t[2]}
+    ),
+)
+wide_leaves = st.one_of(
+    spelled_leaves,
+    spelled_leaves.map(lambda x: {"kind": "not", "x": x}),
+    st.just(None).map(leaf_other),
+)
+wide_predicates = st.recursive(
+    wide_leaves,
+    lambda inner: st.tuples(st.sampled_from(["AND", "OR"]), inner, inner).map(
+        lambda t: {"kind": t[0].lower(), "l": t[1], "r": t[2]}
+    ),
+    max_leaves=8,
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(wide_predicates)
+def test_spark_parsed_shapes_are_sound(ast):
+    rs = ranges_from_predicate(to_sql(ast), TS)
+    for ts in DOMAIN:
+        if could_match(ast, ts):
+            assert in_ranges(rs, ts), f"ts={ts} satisfiable but pruned; sql={to_sql(ast)!r}"
 
 
 # --- TimeRange algebra vs integer-set semantics ----------------------------

@@ -143,18 +143,22 @@ def test_sessionize_gap_semantics(spark, stream_store):
 
 def test_stateful_running_totals_across_batches(spark, stream_store):
     store, src_dir = stream_store
-    _write_events(spark, src_dir, _event_rows(1))
+    # key 3 has only NULL values: its vmax stays NULL
+    null_row = {"companykey": "org1", "metrictype": "m1", "timestamp": T0 + 50_000, "user": 3, "val": None}
+    _write_events(spark, src_dir, _event_rows(1) + [null_row])
     stream = build_metric_stream(spark, store, "org1", "m1")
     totals = stateful_running_totals(stream, "user", "value")
     q = run_available_now(totals, "totals_stream", output_mode="update")
     try:
         # last emitted row per key == final running totals
         pdf = spark.sql("SELECT * FROM totals_stream").toPandas()
+        null_key = spark.sql("SELECT cnt, total, vmax FROM totals_stream WHERE key = 3").collect()
     finally:
         q.stop()
     final = {int(r.key): (int(r.cnt), float(r.total), float(r.vmax)) for r in pdf.groupby("key").tail(1).itertuples()}
     assert final[1] == (3, 16.0, 10.0)  # 10 + 5 + 1
     assert final[2] == (2, 10.0, 7.0)  # 7 + 3
+    assert [tuple(r) for r in null_key] == [(1, 0.0, None)]
 
 
 def test_stream_parquet_sink_roundtrip(spark, stream_store, tmp_path):
